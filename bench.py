@@ -717,7 +717,7 @@ def main() -> None:
             raise RuntimeError("SPARK_GRAFT_BENCH_SKIP_EXTRAS set")
         import pyarrow.parquet as pq
 
-        from trino_adaptive_partitioning_tool_spark.queries import registry as _reg
+        from trino_adaptive_partitioning_tool_spark import session
 
         rewrite = ["lineitem", "orders", "events"]
         twin_queries = [
@@ -743,8 +743,8 @@ def main() -> None:
                 os.symlink(src, dst)
         prev_mpb = spark.conf.get("spark.sql.files.maxPartitionBytes")
         spark.conf.set("spark.sql.files.maxPartitionBytes", "131072")
-        _reg._PLAN_CACHE.clear()  # memoized plans are keyed per sf_dir, but
-        # the conf change must reach every twin plan
+        session.evict(kind="plan")  # memoized plans are keyed per sf_dir,
+        # but the conf change must reach every twin plan
         try:
             twin_timings: dict[str, float] = {}
             for name in twin_queries:
@@ -763,7 +763,7 @@ def main() -> None:
                 )
         finally:
             spark.conf.set("spark.sql.files.maxPartitionBytes", prev_mpb)
-            _reg._PLAN_CACHE.clear()
+            session.evict(kind="plan")
         twin_block = {
             "row_groups": row_groups,
             "queries": twin_timings,

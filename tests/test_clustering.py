@@ -227,20 +227,22 @@ def test_cluster_profile_advisory_columns(spark):
 
 
 def test_evict_fit_caches(spark):
+    from trino_adaptive_partitioning_tool_spark import session
     from trino_adaptive_partitioning_tool_spark.queries import (
         clustering as qc,
     )
 
-    qc._assignments(spark, SMOKE_SF_DIR)
+    assigned = qc._assignments(spark, SMOKE_SF_DIR)
     app = spark.sparkContext.applicationId
-    assert (app, SMOKE_SF_DIR) in qc._ASSIGN_CACHE
+    key = (app, "kmeans", SMOKE_SF_DIR)
+    assert key in session._MEMO
     # filtered eviction for a different sf_dir touches nothing
-    assert qc.evict_fit_caches(app_id=app, sf_dir="/nonexistent") == 0
-    assert (app, SMOKE_SF_DIR) in qc._ASSIGN_CACHE
-    dropped = qc.evict_fit_caches(app_id=app, sf_dir=SMOKE_SF_DIR)
-    assert dropped >= 2  # fit + persisted assignment at minimum
-    assert (app, SMOKE_SF_DIR) not in qc._ASSIGN_CACHE
-    assert (app, SMOKE_SF_DIR) not in qc._FIT_CACHE
+    assert session.evict(app_id=app, sf_dir="/nonexistent") == 0
+    assert key in session._MEMO
+    dropped = session.evict(app_id=app, sf_dir=SMOKE_SF_DIR)
+    assert dropped >= 1  # the fit and its assignment share one entry
+    assert key not in session._MEMO
+    assert not assigned.is_cached  # the persisted assignment is released
     # the surface still works after eviction (re-fits on demand)
     assert qc._assignments(spark, SMOKE_SF_DIR).count() > 0
 
@@ -402,21 +404,24 @@ def test_semdedup_split_mode_matches_registered_result(spark):
 def test_semdedup_split_frame_cached_and_evictable(spark):
     """r9 review finding #3: split mode must not pin a fresh persisted
     assignment frame per invocation — repeat calls share the
-    session-memoized refined frame, and evict_fit_caches releases it
-    with the other per-(app, sf_dir) caches."""
+    session-memoized refined frame, and session.evict releases it
+    with the other per-(app, sf_dir) memos."""
+    from trino_adaptive_partitioning_tool_spark import session
     from trino_adaptive_partitioning_tool_spark.queries import (
         clustering as qc,
     )
 
     app = spark.sparkContext.applicationId
+
+    def split_keys():
+        return [k for k in session._MEMO if k[:3] == (app, "split", SMOKE_SF_DIR)]
+
     qc._semdedup(spark, SMOKE_SF_DIR, split_oversized=True).count()
-    keys = [k for k in qc._SPLIT_CACHE if k[0] == app and k[1] == SMOKE_SF_DIR]
+    keys = split_keys()
     assert len(keys) == 1
-    frame = qc._SPLIT_CACHE[keys[0]]
+    frame = session._MEMO[keys[0]]
     qc._semdedup(spark, SMOKE_SF_DIR, split_oversized=True).count()
-    assert qc._SPLIT_CACHE[keys[0]] is frame  # reused, not re-pinned
-    dropped = qc.evict_fit_caches(app_id=app, sf_dir=SMOKE_SF_DIR)
+    assert session._MEMO[keys[0]] is frame  # reused, not re-pinned
+    dropped = session.evict(app_id=app, sf_dir=SMOKE_SF_DIR)
     assert dropped >= 1
-    assert not [
-        k for k in qc._SPLIT_CACHE if k[0] == app and k[1] == SMOKE_SF_DIR
-    ]
+    assert not split_keys()

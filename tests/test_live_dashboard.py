@@ -112,29 +112,43 @@ def test_query_endpoint_ignores_sf_dir_override(server):
 
 def test_server_close_evicts_clustering_caches_refcounted(spark):
     """A long-lived dashboard server must release this sf_dir's
-    session-memoized fits and persisted assignment frames on close
-    (r7 advice: the caches otherwise accumulate per sf_dir forever) —
-    but ONLY when it is the LAST server on that (app_id, sf_dir): with
-    two concurrent servers, closing one must not drop fits the other
-    (or a concurrent bench) still uses (r8 advice). Runs on its own
-    sf_dir so the module fixture's server can't interfere."""
+    session memos on close (the k-means fit with its persisted
+    assignment frame, the run_analysis profile) — they otherwise
+    accumulate per sf_dir forever — but ONLY when it is the LAST server
+    on that (app_id, sf_dir): with two concurrent servers, closing one
+    must not drop fits the other (or a concurrent bench) still uses.
+    Runs on its own sf_dir so the module fixture's server can't
+    interfere."""
     from conftest import PARITY_SF_DIR
+    from trino_adaptive_partitioning_tool_spark import session
+    from trino_adaptive_partitioning_tool_spark.operators import recommend
     from trino_adaptive_partitioning_tool_spark.queries import (
         clustering as qc,
     )
 
     app = spark.sparkContext.applicationId
+    fit_key = (app, "kmeans", PARITY_SF_DIR)
+
+    def profile_keys():
+        return [
+            k for k in session._MEMO
+            if k[:3] == (app, "profile", PARITY_SF_DIR)
+        ]
+
     srv_a = live.serve_dashboard(spark, PARITY_SF_DIR, port=0)
     srv_b = live.serve_dashboard(spark, PARITY_SF_DIR, port=0)
     try:
         qc._assignments(spark, PARITY_SF_DIR)
-        assert (app, PARITY_SF_DIR) in qc._ASSIGN_CACHE
+        profile = recommend.run_analysis(spark, PARITY_SF_DIR)["profiles"]
+        assert fit_key in session._MEMO
+        assert profile_keys()
     finally:
         srv_a.server_close()
         srv_a.server_close()  # double close must not double-decrement
         # first close: the sibling server still owns the caches
-        assert (app, PARITY_SF_DIR) in qc._ASSIGN_CACHE
+        assert fit_key in session._MEMO
         srv_b.server_close()
     # last close: evicted
-    assert (app, PARITY_SF_DIR) not in qc._ASSIGN_CACHE
-    assert (app, PARITY_SF_DIR) not in qc._FIT_CACHE
+    assert fit_key not in session._MEMO
+    assert not profile_keys()
+    assert not profile.is_cached

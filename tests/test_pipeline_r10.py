@@ -415,18 +415,14 @@ def _is_corrupt(doc_id: int) -> bool:
 def test_embench_cache_evicts_through_fit_cache_seam(spark):
     """r11 review: the decontamination bench matrix is session-cached
     like the k-means fits and must release through the SAME seam."""
-    from trino_adaptive_partitioning_tool_spark.queries import (
-        clustering as qc,
-    )
-    from trino_adaptive_partitioning_tool_spark.queries import (
-        similarity as qs,
-    )
+    from trino_adaptive_partitioning_tool_spark import session
     from trino_adaptive_partitioning_tool_spark.queries.similarity import (
         decontamination_embedding_scan,
     )
 
     decontamination_embedding_scan(spark, PARITY_SF_DIR).count()
     app = spark.sparkContext.applicationId
-    assert (app, PARITY_SF_DIR) in qs._EMBENCH_CACHE
-    qc.evict_fit_caches(app_id=app, sf_dir=PARITY_SF_DIR)
-    assert (app, PARITY_SF_DIR) not in qs._EMBENCH_CACHE
+    key = (app, "embench", PARITY_SF_DIR)
+    assert key in session._MEMO
+    session.evict(app_id=app, sf_dir=PARITY_SF_DIR)
+    assert key not in session._MEMO

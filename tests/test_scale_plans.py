@@ -58,16 +58,16 @@ def _confs(spark, **kv):
     # DataFrame whose physical plan was already finalized under the
     # DEFAULT confs — clearing the plan cache on entry and exit makes
     # every plan assertion in here observe the overridden regime
-    from trino_adaptive_partitioning_tool_spark.queries import registry
+    from trino_adaptive_partitioning_tool_spark import session
 
     old = {k: spark.conf.get(k, None) for k in kv}
-    registry._PLAN_CACHE.clear()
+    session.evict(kind="plan")
     try:
         for k, v in kv.items():
             spark.conf.set(k, v)
         yield
     finally:
-        registry._PLAN_CACHE.clear()
+        session.evict(kind="plan")
         for k, v in old.items():
             if v is None:
                 spark.conf.unset(k)

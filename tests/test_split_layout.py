@@ -6,12 +6,14 @@ envelope additions."""
 from __future__ import annotations
 
 import os
+import shutil
 
 import pyarrow.parquet as pq
 
 from trino_adaptive_partitioning_tool_spark.sources import tables
 
 PARITY_SF_DIR = os.environ.get("PARITY_SF_DIR", "/root/testdata/sf0.01")
+SMOKE_SF_DIR = "/root/testdata/sf0.001"
 SF01 = "/root/testdata/sf0.1"
 
 
@@ -47,6 +49,38 @@ def test_twin_cached_per_process_and_disableable(monkeypatch):
     assert twin1 == twin2  # one rewrite per process
     monkeypatch.setenv("SPARK_GRAFT_SPLIT_LAYOUT", "0")
     assert tables.split_layout_dir(SF01) == SF01
+
+
+def test_twin_links_resolve_from_relative_sf_dir(spark, tmp_path, monkeypatch):
+    """A relative sf_dir must yield a twin whose links all resolve (a
+    link target relative to the caller's cwd dangles inside the twin)."""
+    shutil.copytree(SMOKE_SF_DIR, tmp_path / "sf", copy_function=shutil.copyfile)
+    monkeypatch.chdir(tmp_path)
+    twin = tables.split_layout_dir("sf")
+    assert twin != "sf"
+    for fn in os.listdir(twin):
+        assert os.path.exists(os.path.join(twin, fn)), fn
+    assert tables.load_table(spark, "sf", "region").count() == 5
+
+
+def test_twin_keeps_directory_tables(spark, tmp_path):
+    """An sf_dir mixing a file table with a Spark directory table
+    (name.parquet/) keeps both readable through the twin."""
+    big = tmp_path / "embeddings.parquet"
+    shutil.copyfile(f"{SMOKE_SF_DIR}/embeddings.parquet", big)
+    assert os.path.getsize(big) >= 65536  # a table the twin rewrites
+    (tmp_path / "region.parquet").mkdir()
+    pq.write_table(
+        pq.read_table(f"{SMOKE_SF_DIR}/region.parquet"),
+        tmp_path / "region.parquet" / "part-00000.parquet",
+    )
+    sf_dir = str(tmp_path)
+    assert tables.split_layout_dir(sf_dir) != sf_dir
+    assert tables.load_table(spark, sf_dir, "region").count() == 5
+    assert (
+        tables.load_table(spark, sf_dir, "embeddings").count()
+        == pq.ParquetFile(big).metadata.num_rows
+    )
 
 
 def test_load_table_reads_identical_rows_through_twin(spark):
@@ -188,3 +222,13 @@ def test_mined_fixture_logs_shared_and_equal(spark):
     assert sorted(map(tuple, a.collect())) == sorted(
         map(tuple, direct.collect())
     )
+
+
+def test_fixture_query_ids_unique():
+    """run_analysis serves a time-filtered default log as a semi-join on
+    the shared mined frame, which equals mining the filtered log only
+    while query_id is unique in the fixture log."""
+    from trino_adaptive_partitioning_tool_spark.sources import fixtures
+
+    ids = [r[0] for r in fixtures.QUERY_LOG_ROWS]
+    assert len(ids) == len(set(ids))

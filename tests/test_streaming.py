@@ -223,6 +223,7 @@ def test_outer_attribution_stream_equals_batch(spark):
     outer row included (watermark advanced past all real windows by the
     far-future sentinels)."""
     from conftest import SMOKE_SF_DIR
+    from trino_adaptive_partitioning_tool_spark import session
     from trino_adaptive_partitioning_tool_spark.queries import (
         streaming_q as sq,
     )
@@ -240,8 +241,13 @@ def test_outer_attribution_stream_equals_batch(spark):
         )
     )
     # batch twin over the SAME json feed (ms truncation included)
-    tmp = sq._FEED_CACHE[
-        (spark.sparkContext.applicationId, SMOKE_SF_DIR, "clickpurchase_outer")
+    tmp = session._MEMO[
+        (
+            spark.sparkContext.applicationId,
+            "feed",
+            SMOKE_SF_DIR,
+            "clickpurchase_outer",
+        )
     ]
     batch = spark.read.schema(sj.EVENT_SCHEMA).json(f"{tmp}/events")
     want = sorted(

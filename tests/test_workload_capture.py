@@ -65,6 +65,7 @@ def test_plan_cache_keyed_on_application_id(spark):
     """A memoized plan must be keyed by applicationId, not id(spark):
     a stopped session's id() can be reused by a new SparkSession object,
     which would resurrect a DataFrame bound to a dead session."""
+    from trino_adaptive_partitioning_tool_spark import session
     from trino_adaptive_partitioning_tool_spark.queries import registry
 
     calls = {"n": 0}
@@ -80,10 +81,71 @@ def test_plan_cache_keyed_on_application_id(spark):
         fn(spark, "/x")
         assert calls["n"] == 1  # memoized within one session
         app_id = spark.sparkContext.applicationId
-        key = (app_id, "/x", "_cache_probe_test")
-        assert key in registry._PLAN_CACHE
+        key = (app_id, "plan", "/x", "_cache_probe_test")
+        assert key in session._MEMO
         # a different applicationId (fresh context after stop()) misses
-        assert (id(spark), "/x", "_cache_probe_test") not in registry._PLAN_CACHE
+        assert (id(spark), "plan", "/x", "_cache_probe_test") not in session._MEMO
     finally:
         registry._QUERIES.pop("_cache_probe_test", None)
-        registry._PLAN_CACHE.pop((spark.sparkContext.applicationId, "/x", "_cache_probe_test"), None)
+        session.evict(kind="plan", sf_dir="/x")
+
+
+def test_memo_drops_stale_sessions_on_insert(spark):
+    """Adding an entry drops every entry of another applicationId: a new
+    SparkContext means the old one stopped, so its memos are dead."""
+    from trino_adaptive_partitioning_tool_spark import session
+
+    stale = ("app-stopped", "_memo_probe_test", None)
+    session._MEMO[stale] = object()
+    try:
+        session.memo(spark, ("_memo_probe_test", None), object)
+        assert stale not in session._MEMO
+    finally:
+        session._MEMO.pop(stale, None)
+        session.evict(kind="_memo_probe_test")
+
+
+def test_memo_concurrent_first_calls_build_once(spark):
+    """Threads racing first calls to the same memo keys: each key builds
+    once and every caller gets that one value (the per-key lock). More
+    threads than cores and a short switch interval widen the race."""
+    import sys
+    import threading
+    import time
+    from collections import Counter
+
+    from trino_adaptive_partitioning_tool_spark import session
+
+    builds = Counter()
+    results = {k: [] for k in range(4)}
+    barrier = threading.Barrier(8)
+
+    def build(k):
+        builds[k] += 1
+        time.sleep(0.05)  # hold the build open while other threads arrive
+        return object()
+
+    def first_calls():
+        barrier.wait()
+        for k in range(4):
+            results[k].append(
+                session.memo(
+                    spark, ("_memo_probe_test", None, k), lambda: build(k)
+                )
+            )
+
+    threads = [threading.Thread(target=first_calls) for _ in range(8)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+        assert not any(t.is_alive() for t in threads)
+        assert builds == Counter({k: 1 for k in range(4)})
+        for got in results.values():
+            assert len(got) == 8 and all(v is got[0] for v in got)
+    finally:
+        sys.setswitchinterval(interval)
+        session.evict(kind="_memo_probe_test")

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import session
 from ..sources import fixtures, tables
 from . import mining, scoring, stats, transforms
 
@@ -54,44 +55,20 @@ def view_columns_df(
     return spark.createDataFrame(rows, schema=schema), sorted(table_names)
 
 
-# Session-memoized default-args analyses: several registered queries
-# (flagship recommendations, their exact twin, the drift triggers, the
-# dashboard) each consume run_analysis output, but mapInPandas closures
-# canonicalize differently per plan build, so the .cache() marks inside
-# one call NEVER hit from a separately-built call — without this memo
-# each consumer re-materializes the whole mining+profiling pipeline.
-# Keyed on applicationId so a new session starts clean; only the
-# default-input path memoizes (custom logs/views/filters are caller
-# state the key can't see).
-_ANALYSIS_CACHE: dict[tuple, dict[str, DataFrame]] = {}
-
-# r14 (r13 verdict #7): ONE session-memoized mined-token frame over the
-# fixture log, shared by every advisor query that mines the default log
-# (mined_workload, workload_drift_report, bucket_join_advice,
-# partition_recommendation_drift, and run_analysis's default path).
-# Each of those previously built its own mapInPandas mining plan — and,
-# per the canonicalization note above, Spark's CacheManager never
-# matches python-closure plans across separate builds, so the Arrow
-# mining stage re-executed per query family member (~0.3-0.8s of each
-# cold). Dimension-sized (tokens per fixture query), persisted,
-# evictable; consumers filter/project from it lazily.
-_MINED_LOGS_CACHE: dict[str, DataFrame] = {}
-
-
+# Session-memoized (session.memo) because Spark's CacheManager never
+# matches mapInPandas plans across separate builds: without one shared
+# object per session every consumer re-runs the stage.
 def mined_fixture_logs(spark: SparkSession) -> DataFrame:
-    key = spark.sparkContext.applicationId
-    hit = _MINED_LOGS_CACHE.get(key)
-    if hit is None:
-        hit = _MINED_LOGS_CACHE[key] = mining.mine_query_log(
-            fixtures.query_logs_df(spark)
-        ).persist()
-    return hit
-
-
-# r14: session-memoized exact/approx table profiles (see the call site
-# in run_analysis below) — the profile is log-independent, so every
-# as-of window shares one materialization per (table set, mode).
-_PROFILE_CACHE: dict[tuple, DataFrame] = {}
+    """The mined-token frame over the fixture log, shared by every
+    advisor query that mines the default log (mined_workload,
+    workload_drift_report, bucket_join_advice,
+    partition_recommendation_drift and run_analysis's default path).
+    Dimension-sized: tokens per fixture query."""
+    return session.memo(
+        spark,
+        ("mined_logs", None),
+        lambda: mining.mine_query_log(fixtures.query_logs_df(spark)).persist(),
+    )
 
 
 def _profiled_tables(
@@ -101,21 +78,15 @@ def _profiled_tables(
     exact: bool,
     percentiles: bool,
 ) -> DataFrame:
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        tuple(table_names),
-        exact,
-        percentiles,
-    )
-    hit = _PROFILE_CACHE.get(key)
-    if hit is None:
-        hit = _PROFILE_CACHE[key] = stats.profile_tables(
+    return session.memo(
+        spark,
+        ("profile", sf_dir, tuple(table_names), exact, percentiles),
+        lambda: stats.profile_tables(
             {t: tables.load_table(spark, sf_dir, t) for t in table_names},
             exact=exact,
             percentiles=percentiles,
-        ).persist()
-    return hit
+        ).persist(),
+    )
 
 
 def run_analysis(
@@ -133,17 +104,18 @@ def run_analysis(
     reference splices a raw SQL string — an injection surface, SURVEY
     §8.5; we require a Column expression).
     """
-    memo_key = None
+    args = (spark, sf_dir, logs_df, views_df, time_filter, exact_stats,
+            profile_percentiles)
     if logs_df is None and views_df is None and time_filter is None:
-        memo_key = (
-            spark.sparkContext.applicationId,
-            sf_dir,
-            exact_stats,
-            profile_percentiles,
-        )
-        hit = _ANALYSIS_CACHE.get(memo_key)
-        if hit is not None:
-            return dict(hit)
+        # several registered queries consume the default analysis; only
+        # this path memoizes (custom inputs are caller state)
+        key = ("analysis", sf_dir, exact_stats, profile_percentiles)
+        return dict(session.memo(spark, key, lambda: _analysis(*args)))
+    return _analysis(*args)
+
+
+def _analysis(spark, sf_dir, logs_df, views_df, time_filter, exact_stats,
+              profile_percentiles) -> dict[str, DataFrame]:
     logs = logs_df if logs_df is not None else fixtures.query_logs_df(spark)
     views = views_df if views_df is not None else fixtures.catalog_views_df(spark)
     views = views.where(F.col("table_type") == "MATERIALIZED VIEW")
@@ -172,12 +144,9 @@ def run_analysis(
         mined_logs = mining.mine_query_log(logs).cache()
     candidates, table_names = view_columns_df(spark, sf_dir, views)
 
-    # r14 (r13 verdict #7): table profiles are a pure function of the
-    # TABLES — they do not depend on the log window or the views filter
-    # beyond the table set — yet every as-of invocation (the
-    # spec-history query runs three) re-ran the exact-NDV aggregation
-    # per generation. Session-memoized per (table set, exact,
-    # percentiles); persisted (dimension-sized: one row per column).
+    # table profiles depend on the table set only, not the log window:
+    # every as-of invocation (the spec-history query runs three) shares
+    # one persisted, dimension-sized profile per (table set, mode)
     profiled = _profiled_tables(
         spark, sf_dir, table_names, exact_stats, profile_percentiles
     )
@@ -202,7 +171,7 @@ def run_analysis(
     transformed = transforms.with_transforms(top)
     scripts = transforms.partition_scripts(transformed, views)
 
-    result = {
+    return {
         "query_logs": logs,
         "views": views,
         "mined_logs": mined_logs,
@@ -217,10 +186,6 @@ def run_analysis(
         "top_candidates": top,
         "recommendations": scripts,
     }
-    if memo_key is not None:
-        _ANALYSIS_CACHE[memo_key] = result
-        return dict(result)
-    return result
 
 
 def recommendations(spark: SparkSession, sf_dir: str) -> DataFrame:

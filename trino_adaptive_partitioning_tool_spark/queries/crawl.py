@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import session
 from ..operators import crawl as cops
 from .registry import register
 
@@ -242,8 +243,6 @@ from ..operators import jsonl as jops
 
 jops_corrupt_sql = jops.corrupt_pred_sql() + " AS corrupt"
 
-_JSONL_CACHE: dict[tuple[str, str], str] = {}
-
 
 def _jsonl_shards(spark: SparkSession, sf_dir: str) -> str:
     """Write-once gzip JSONL shards derived from the documents table
@@ -253,12 +252,12 @@ def _jsonl_shards(spark: SparkSession, sf_dir: str) -> str:
 
     from ..sources import tables as _tables
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _JSONL_CACHE:
+    def write() -> str:
         path = tempfile.mkdtemp(prefix="tapt_jsonl_") + "/docs"
         jops.write_jsonl_gz(_tables.load_table(spark, sf_dir, "documents"), path)
-        _JSONL_CACHE[key] = path
-    return _JSONL_CACHE[key]
+        return path
+
+    return session.memo(spark, ("jsonl", sf_dir), write)
 
 
 # shared by the batch query below and the streaming twin

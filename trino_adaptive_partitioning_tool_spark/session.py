@@ -8,13 +8,22 @@ Tuned for the driver's local[32] harness but with cluster-safe defaults:
 AQE (runtime re-plan, skew-join splitting, partition coalescing) is always
 on, shuffle partitions default to the local core count instead of 200, and
 Arrow is enabled for every pandas hand-off.
+
+Also owns the session memo: what the advisor and the registered queries
+build once per session (fixture frames, mined logs, profiles, analyses,
+prepared plans, k-means fits, feed directories) lives in one dict here.
 """
 
 from __future__ import annotations
 
 import os
+import threading
+from collections.abc import Callable
+from typing import Any, TypeVar
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+_T = TypeVar("_T")
 
 
 def default_parallelism() -> int:
@@ -86,3 +95,80 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+# (applicationId, kind, sf_dir, *rest) -> built value, and one build lock
+# per key. applicationId is unique per SparkContext lifetime, unlike
+# id(spark), which a new session object can reuse.
+_MEMO: dict[tuple, Any] = {}
+_LOCKS: dict[tuple, threading.Lock] = {}
+_GUARD = threading.Lock()
+
+
+def memo(spark: SparkSession, key: tuple, build: Callable[[], _T]) -> _T:
+    """Return the value memoized under (applicationId, *key), calling
+    ``build()`` at most once per key. ``key`` is (kind, sf_dir, *rest),
+    with sf_dir None for session-wide entries: evict() filters on both.
+
+    Each key has its own lock, so concurrent first calls build once while
+    builds of other keys proceed; builds nest (an analysis builds its
+    profile) but never cyclically, so the locks cannot deadlock. Adding
+    an entry drops those of any other applicationId: a new SparkContext
+    means the old one stopped, and its cached blocks went with it."""
+    full = (spark.sparkContext.applicationId, *key)
+    with _GUARD:
+        if full in _MEMO:
+            return _MEMO[full]
+        lock = _LOCKS.setdefault(full, threading.Lock())
+    with lock:
+        with _GUARD:
+            if full in _MEMO:
+                return _MEMO[full]
+        value = build()
+        with _GUARD:
+            for entries in (_MEMO, _LOCKS):
+                for stale in [k for k in entries if k[0] != full[0]]:
+                    del entries[stale]
+            _MEMO[full] = value
+    return value
+
+
+def _frames(value: Any) -> list[DataFrame]:
+    """The DataFrames a memo value holds: itself or its direct members."""
+    if isinstance(value, dict):
+        value = tuple(value.values())
+    elif not isinstance(value, tuple):
+        value = (value,)
+    return [v for v in value if isinstance(v, DataFrame)]
+
+
+def evict(
+    app_id: str | None = None,
+    kind: str | None = None,
+    sf_dir: str | None = None,
+) -> int:
+    """Drop the memo entries matching every given filter (all entries
+    when none is given) and unpersist the cached DataFrames they hold
+    that no kept entry also holds. Unpersist failures (e.g. a stopped
+    SparkContext) are swallowed: eviction always succeeds. Returns the
+    number of entries dropped."""
+    with _GUARD:
+        keys = [
+            k
+            for k in _MEMO
+            if (app_id is None or k[0] == app_id)
+            and (kind is None or k[1] == kind)
+            and (sf_dir is None or k[2] == sf_dir)
+        ]
+        dropped = [_MEMO.pop(k) for k in keys]
+        for k in keys:
+            _LOCKS.pop(k, None)
+        kept = {id(df) for v in _MEMO.values() for df in _frames(v)}
+    for value in dropped:
+        for df in _frames(value):
+            if df.is_cached and id(df) not in kept:
+                try:
+                    df.unpersist()
+                except Exception:
+                    pass
+    return len(dropped)

@@ -24,6 +24,8 @@ import datetime as _dt
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from .. import session
+
 QUERY_LOG_COLUMNS = (
     "query_id",
     "query",
@@ -262,29 +264,20 @@ VIEW_COLUMN_ROWS: list[tuple[str, str]] = [
 ]
 
 
-# Session-memoized fixture frames: the fixture tables are consulted by
-# dozens of advisor queries per session, and a fresh createDataFrame
-# costs ~0.5s PER ACTION (default-parallelism local relation → 32 tasks
-# for 20 rows). Building each once per session on 2 slices and keeping
-# the persisted OBJECT (CacheManager does not canonicalize fresh
-# LocalRelations together) drops the per-query fixed cost ~5x. If a
-# test's clearCache() evicts the blocks the frame silently recomputes —
-# correctness never depends on the cache.
-_FIXTURE_DF_CACHE: dict[tuple, DataFrame] = {}
-
-
+# Built once per session (session.memo) on 2 slices and persisted: a
+# fresh createDataFrame costs ~0.5s per action (default-parallelism local
+# relation, 32 tasks for 20 rows), and CacheManager does not canonicalize
+# fresh LocalRelations together. Correctness never depends on the cache.
 def _memo_df(spark: SparkSession, key: str, rows, schema) -> DataFrame:
     from pyspark import StorageLevel
 
-    k = (spark.sparkContext.applicationId, key)
-    df = _FIXTURE_DF_CACHE.get(k)
-    if df is None:
-        df = spark.createDataFrame(
+    return session.memo(
+        spark,
+        ("fixture", None, key),
+        lambda: spark.createDataFrame(
             spark.sparkContext.parallelize(rows, 2), schema=schema
-        )
-        df.persist(StorageLevel.MEMORY_ONLY)
-        _FIXTURE_DF_CACHE[k] = df
-    return df
+        ).persist(StorageLevel.MEMORY_ONLY),
+    )
 
 
 def view_columns_fixture_df(spark: SparkSession) -> DataFrame:

@@ -33,6 +33,8 @@ from urllib.parse import parse_qs, urlparse
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import session
+
 _ROW_CAP = 500
 
 
@@ -185,11 +187,9 @@ class _Handler(BaseHTTPRequestHandler):
         return html.replace("<body>", "<body>" + toolbar, 1)
 
 
-# live servers per (applicationId, sf_dir): the clustering fit caches
-# are keyed the same way, so eviction on close must wait for the LAST
-# server sharing the key — closing one of two concurrent dashboards
-# (or one racing a bench on the same sf_dir) used to drop fits still
-# in use and trigger silent re-fits (r8 advice)
+# live servers per (applicationId, sf_dir): eviction on close waits for
+# the LAST server sharing the key, so closing one of two concurrent
+# dashboards does not drop memos the other still uses
 _SERVER_REFS: dict[tuple[str, str], int] = {}
 
 
@@ -198,14 +198,10 @@ def serve_dashboard(
 ) -> ThreadingHTTPServer:
     """Bind the live dashboard on localhost:port (0 = ephemeral) and
     return the server (caller drives serve_forever / shutdown — the CLI
-    runs it in the foreground, tests in a thread). server_close()
-    additionally releases this sf_dir's session-memoized clustering
-    fits and persisted assignment frames (queries/clustering caches) —
-    a long-lived server cycling through many sf_dirs must not
-    accumulate executor memory (r7 advice). Eviction is
-    reference-counted per (applicationId, sf_dir): with several servers
-    (or repeated open/close cycles) on the same key, only the last
-    close evicts."""
+    runs it in the foreground, tests in a thread). The last
+    server_close() per (applicationId, sf_dir) also evicts this sf_dir's
+    session memos (session.evict), so a long-lived server cycling
+    through many sf_dirs does not accumulate executor memory."""
     handler = type(
         "BoundHandler", (_Handler,), {"spark": spark, "sf_dir": sf_dir}
     )
@@ -224,11 +220,6 @@ def serve_dashboard(
             if _SERVER_REFS[key] > 0:
                 return  # other servers still share this key's caches
             _SERVER_REFS.pop(key, None)
-            try:
-                from ..queries.clustering import evict_fit_caches
-
-                evict_fit_caches(app_id=key[0], sf_dir=sf_dir)
-            except Exception:
-                pass  # eviction is best-effort; closing must not raise
+            session.evict(app_id=key[0], sf_dir=sf_dir)
 
     return _Server(("127.0.0.1", port), handler)

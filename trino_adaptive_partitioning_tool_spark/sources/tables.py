@@ -89,19 +89,23 @@ def split_layout_dir(sf_dir: str) -> str:
         cached = _SPLIT_CACHE.get(sf_dir)
         if cached is not None and os.path.isdir(cached):
             return cached
+        # absolute link targets: a relative sf_dir would otherwise
+        # resolve against the twin dir and dangle
+        root = os.path.abspath(sf_dir)
         names = [
-            fn for fn in sorted(os.listdir(sf_dir))
-            if fn.endswith(".parquet")
-            and os.path.isfile(os.path.join(sf_dir, fn))
-        ] if os.path.isdir(sf_dir) else []
-        if not names:
+            fn for fn in sorted(os.listdir(root)) if fn.endswith(".parquet")
+        ] if os.path.isdir(root) else []
+        if not any(os.path.isfile(os.path.join(root, fn)) for fn in names):
             _SPLIT_CACHE[sf_dir] = sf_dir
             return sf_dir
         twin = tempfile.mkdtemp(prefix="tapt_split_layout_")
         atexit.register(shutil.rmtree, twin, ignore_errors=True)
         for fn in names:
-            src = os.path.join(sf_dir, fn)
+            src = os.path.join(root, fn)
             dst = os.path.join(twin, fn)
+            if os.path.isdir(src):  # Spark directory table: link as is
+                os.symlink(src, dst)
+                continue
             try:
                 pf = _pq.ParquetFile(src)
                 rewrite = (
