@@ -52,13 +52,16 @@ for t in (
 import __spark_entry__ as e  # noqa: E402
 from pyspark.sql import SparkSession  # noqa: E402
 
+from trino_adaptive_partitioning_tool_spark.session import driver_memory  # noqa: E402
+
 spark = (
     SparkSession.builder.master("local[32]")
     .config("spark.sql.shuffle.partitions", "32")
     # the ONLY divergence from the driver's plain session: its default
     # 1g driver heap dies mid-sweep at sf0.1 (196 queries + persisted
-    # assignment frames in one JVM); correctness semantics unchanged
-    .config("spark.driver.memory", "16g")
+    # assignment frames in one JVM), so size it from the host like
+    # get_spark does; correctness semantics unchanged
+    .config("spark.driver.memory", driver_memory())
     .getOrCreate()
 )
 

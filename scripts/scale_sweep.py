@@ -185,10 +185,12 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
+    from trino_adaptive_partitioning_tool_spark.session import driver_memory
+
     spark = (
         SparkSession.builder.master("local[32]")
         .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "16g")
+        .config("spark.driver.memory", driver_memory())
         .getOrCreate()
     )
     from trino_adaptive_partitioning_tool_spark.queries import registry

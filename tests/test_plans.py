@@ -91,9 +91,12 @@ def test_gap_fill_filter_pushdown(spark):
 
 def test_minhash_lsh_no_cartesian_and_partial_agg(spark):
     """The LSH candidate join must be an equi-join on (band, band_hash) —
-    never a cartesian/broadcast-nested-loop — and the signature aggregate
-    must partial-aggregate map-side (the shuffle carries 64 longs per
-    doc, not the shingle stream)."""
+    never a cartesian/broadcast-nested-loop — and the signature plan
+    must be map-only: one MapInArrow kernel, no Window sort and no
+    hash-partitioned Exchange (the token/shingle stream never shuffles;
+    only the round-robin spread of ensure_parallelism may appear)."""
+    import re
+
     from trino_adaptive_partitioning_tool_spark.operators import dedup
 
     docs = tables.load_table(spark, SMOKE_SF_DIR, "documents")
@@ -101,8 +104,10 @@ def test_minhash_lsh_no_cartesian_and_partial_agg(spark):
     plan = pi.physical_plan(pairs)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-    sigs = dedup.minhash_signatures(docs)
-    assert pi.has_partial_aggregation(sigs), pi.physical_plan(sigs)[:800]
+    sig_plan = pi.physical_plan(dedup.minhash_signatures(docs))
+    assert not re.search(r"\bWindow\b", sig_plan), sig_plan
+    assert "hashpartitioning" not in sig_plan, sig_plan
+    assert sig_plan.count("MapInArrow") == 1, sig_plan
 
 
 def test_simhash_pairs_no_cartesian(spark):

@@ -232,3 +232,28 @@ def test_fixture_query_ids_unique():
 
     ids = [r[0] for r in fixtures.QUERY_LOG_ROWS]
     assert len(ids) == len(set(ids))
+
+
+def test_twin_rewrite_matches_whole_table_rewrite(tmp_path):
+    """The streamed twin rewrite (one row group in memory at a time)
+    lays each table out exactly as a whole-table write_table with the
+    same row_group_size would: same row-group count, row-group sizes
+    and rows."""
+    twin = tables.split_layout_dir(SF01)
+    rewritten = [
+        fn for fn in sorted(os.listdir(twin))
+        if not os.path.islink(os.path.join(twin, fn))
+    ]
+    assert "lineitem.parquet" in rewritten
+    for fn in rewritten:
+        whole = pq.read_table(f"{SF01}/{fn}")
+        ref = tmp_path / fn
+        pq.write_table(
+            whole, ref, row_group_size=max(1024, -(-whole.num_rows // 32))
+        )
+        a, b = pq.ParquetFile(ref).metadata, pq.ParquetFile(f"{twin}/{fn}").metadata
+        assert a.num_row_groups == b.num_row_groups, fn
+        assert [a.row_group(i).num_rows for i in range(a.num_row_groups)] == [
+            b.row_group(i).num_rows for i in range(b.num_row_groups)
+        ], fn
+        assert pq.read_table(ref).equals(pq.read_table(f"{twin}/{fn}")), fn

@@ -149,3 +149,22 @@ def test_memo_concurrent_first_calls_build_once(spark):
     finally:
         sys.setswitchinterval(interval)
         session.evict(kind="_memo_probe_test")
+
+
+def test_driver_memory_sized_from_host(tmp_path, monkeypatch):
+    """Unpinned, the driver heap is about half of MemTotal capped at
+    16g; SPARK_GRAFT_DRIVER_MEM wins; an unreadable meminfo keeps 16g."""
+    from trino_adaptive_partitioning_tool_spark.session import driver_memory
+
+    def host(kb: int) -> str:
+        p = tmp_path / f"meminfo{kb}"
+        p.write_text(f"MemTotal:       {kb} kB\nMemFree:        1024 kB\n")
+        return str(p)
+
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    assert driver_memory(host(16_070 * 1024)) == "8035m"  # 15.7 GB host
+    assert driver_memory(host(32 * 1024 * 1024)) == "16g"  # exactly 2 x 16g
+    assert driver_memory(host(256 * 1024 * 1024)) == "16g"
+    assert driver_memory(str(tmp_path / "missing")) == "16g"
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "1g")
+    assert driver_memory(host(16_070 * 1024)) == "1g"

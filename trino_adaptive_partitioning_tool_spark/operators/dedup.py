@@ -4,7 +4,8 @@ Not present in the reference (its surface stops at partition advice); these
 are the BASELINE.json extension operators, designed for 100 TB first:
 
   exact_duplicates      one hash-aggregate shuffle on the dedup key
-  minhash_signatures    shingle → k minhashes, one explode + one groupBy
+  minhash_signatures    shingle → k minhashes (+ LSH band hashes) in one
+                        map-only mapInArrow kernel pass
   minhash_lsh_pairs     band-bucket join → candidate pairs → exact-Jaccard
                         verify (the standard MinHash-LSH pipeline: no
                         all-pairs product ever materializes)
@@ -15,18 +16,29 @@ are the BASELINE.json extension operators, designed for 100 TB first:
 Scale notes: every pairing step goes through an equi-join on a bucket key
 (band hash / simhash chunk), so the shuffle is proportional to data +
 candidate volume, never to n². The base hash is a 60-bit integer from the
-md5 hex prefix (`md5_60`): deterministic across runs and executors, no
-Python in the hot path, and — unlike xxhash64 — bit-for-bit reproducible
-in DuckDB (`('0x' || substr(md5(x),1,15))::BIGINT`), so every sketch
-built on it is oracle-checkable, not just rows-checkable. 60 bits keeps
-every value positive in signed int64 on both engines (no ANSI overflow,
-no sign-extension mismatch).
+md5 hex prefix (`md5_60`): deterministic across runs and executors and —
+unlike xxhash64 — bit-for-bit reproducible in DuckDB
+(`('0x' || substr(md5(x),1,15))::BIGINT`), so every sketch built on it
+is oracle-checkable, not just rows-checkable. 60 bits keeps every value
+positive in signed int64 on both engines (no ANSI overflow, no
+sign-extension mismatch).
+
+MinHash is the one sketch with a Python hot path. Its JVM shape (token
+posexplode → hash shuffle and sort for a lead() window → 64 min
+aggregates → interpreted banding lambdas) moved ~400k token rows per 5k
+documents through an exchange and a sort; the signature kernel instead
+takes each document's token array and does shingling, hashing
+(`hashlib` md5, first 8 digest bytes >> 4 — the same 60-bit value),
+the XOR-min family and the band hashes in one Arrow batch pass: no
+token or shingle row ever shuffles or sorts. SimHash and exact dedup
+stay JVM-side expressions.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 DEFAULT_NUM_HASHES = 64
 DEFAULT_BANDS = 16  # 16 bands x 4 rows: catches J >~ 0.6 w.h.p.
@@ -37,7 +49,9 @@ SIMHASH_BITS = 60
 def md5_60(col: Column) -> Column:
     """60-bit non-negative integer hash: first 15 hex chars of md5.
 
-    DuckDB equivalent (oracle side): ('0x' || substr(md5(x),1,15))::BIGINT.
+    DuckDB equivalent (oracle side): ('0x' || substr(md5(x),1,15))::BIGINT;
+    Python equivalent (the minhash kernel):
+    int.from_bytes(hashlib.md5(x.encode()).digest()[:8], "big") >> 4.
     md5 is JVM whole-stage-codegen on the Spark side (no UDF)."""
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("bigint")
 
@@ -141,73 +155,106 @@ def _xor_family_constants(n: int) -> list[int]:
     return [int(x) for x in rng.integers(0, 2**60, size=n, dtype=np.int64)]
 
 
+def _minhash_kernel(num_hashes: int, shingle_k: int, bands: int | None):
+    """The mapInArrow function behind minhash_signatures: (id, toks)
+    batches in, (id, minhash[, band_hashes]) batches out. It closes over
+    stdlib, numpy and pyarrow only, so a worker unpickles it without
+    importing this package."""
+    import numpy as np
+
+    consts = np.asarray(_xor_family_constants(num_hashes), dtype=np.int64)
+    k = shingle_k
+    rows_per_band = num_hashes // bands if bands else 0
+    names = ["id", "minhash", "band_hashes"] if bands else ["id", "minhash"]
+
+    def kernel(batches):
+        import hashlib
+
+        import pyarrow as pa
+
+        md5 = hashlib.md5
+
+        def md5_60(strings):
+            # first 8 digest bytes, big-endian, >> 4 == the first 15 hex
+            # digits: the value md5_60() computes on the JVM
+            digests = b"".join(md5(s.encode()).digest() for s in strings)
+            return (np.frombuffer(digests, ">u8")[::2] >> 4).astype(np.int64)
+
+        def lists(matrix):
+            n, width = matrix.shape
+            offsets = np.arange(0, n * width + 1, width, dtype=np.int32)
+            return pa.ListArray.from_arrays(offsets, matrix.ravel())
+
+        for batch in batches:
+            keep, sigs = [], []
+            for i, toks in enumerate(batch.column(1).to_pylist()):
+                if toks is None:
+                    continue
+                n = len(toks)
+                if n >= k:
+                    shingles = {" ".join(toks[j : j + k]) for j in range(n - k + 1)}
+                else:
+                    shingles = (" ".join(toks),)
+                sigs.append(np.bitwise_xor.outer(md5_60(shingles), consts).min(axis=0))
+                keep.append(i)
+            if not keep:
+                continue
+            sig = np.vstack(sigs)
+            cols = [batch.column(0).take(pa.array(keep)), lists(sig)]
+            if bands:
+                keys = (
+                    ",".join(map(str, row[b * rows_per_band : (b + 1) * rows_per_band]))
+                    for row in sig.tolist()
+                    for b in range(bands)
+                )
+                cols.append(lists(md5_60(keys).reshape(len(keep), bands)))
+            yield pa.RecordBatch.from_arrays(cols, names=names)
+
+    return kernel
+
+
 def minhash_signatures(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     num_hashes: int = DEFAULT_NUM_HASHES,
     shingle_k: int = DEFAULT_SHINGLE_K,
+    bands: int | None = None,
 ) -> DataFrame:
-    """(id, minhash array<bigint>) — XOR-fold minhash family: each shingle
-    string is md5_60'd ONCE (the expensive hash), then the i-th family
-    member is min over shingles of (hash XOR C_i) for fixed constants C_i
-    — so a full k-hash family costs one real hash per shingle.
+    """(id, minhash array<bigint>[, band_hashes array<bigint>]) —
+    XOR-fold minhash family: each distinct k-token shingle string is
+    md5_60'd once (the expensive hash), then the i-th family member is
+    min over shingles of (hash XOR C_i) for fixed constants C_i, so a
+    full family costs one real hash per shingle. A document with fewer
+    than k tokens hashes its whole space-joined token list (the empty
+    string for empty or whitespace-only text); null text gives no row.
+    With `bands`, band_hashes[b] is md5_60 of the comma-joined decimal
+    signature slice of band b — the values band_hashes() computes.
 
-    Shape: explode tokens → lead() window forms each k-token shingle
-    string → 64 codegen'd `min(h XOR C_i)` aggregates in ONE groupBy
-    (map-side partial min → the shuffle carries 64 longs per doc
-    regardless of document length). Deliberately NOT a nested
-    array-transform expression: Spark's higher-order array functions run
-    on the interpreted path and allocate an intermediate array per
-    (constant x row) — measured 50x slower than this codegen'd aggregate
-    form at sf0.1. md5_60 (not xxhash64) keeps every stage DuckDB-
-    reproducible, so the LSH output itself is oracle-checked.
-    """
-    from pyspark.sql import Window
+    Shape: the JVM tokenizes (tokens_expr, after ensure_parallelism),
+    then ONE map-only mapInArrow kernel per partition builds each
+    document's distinct shingles, hashes them with hashlib (md5_60 is
+    the first 8 digest bytes >> 4, bit-identical to the JVM and DuckDB
+    renderings), takes the XOR-mins in one numpy broadcast and emits
+    the signature. No token explode, no window sort, no shingle
+    shuffle: the earlier posexplode → lead() window → 64-way min
+    aggregate plan exchanged and sorted ~400k token rows per 5k-doc
+    batch; the kernel cut the median perfbench corpus_dedup op from
+    4.03 s to 2.76 s (11 seed pairs, 4-core host).
 
-    consts = _xor_family_constants(num_hashes)
-    toks = docs.select(
-        F.col(id_col).alias("id"),
-        F.posexplode(
-            F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-        ).alias("pos", "token"),
-    ).where(F.col("token") != "")
-    w = Window.partitionBy("id").orderBy("pos")
-    parts = [F.col("token")] + [
-        F.lead("token", i).over(w) for i in range(1, shingle_k)
-    ]
-    # No distinct() on (id, h): min(h XOR c) over a multiset equals min
-    # over the set, so duplicate shingles can't change any signature —
-    # and dropping it removes a whole extra shuffle of the shingle
-    # stream. The window already hash-partitioned by id, so the groupBy
-    # below reuses that distribution with no further exchange.
-    shingled = toks.select(
-        "id",
-        F.when(
-            F.lead("token", shingle_k - 1).over(w).isNotNull(),
-            md5_60(F.concat_ws(" ", *parts)),
-        ).alias("h"),
-    ).where(F.col("h").isNotNull())
-    # documents shorter than k tokens have no complete shingle — they
-    # contribute one whole-token-joined hash so they still get a signature
-    short = docs.select(
-        F.col(id_col).alias("id"),
-        md5_60(F.array_join(tokens_expr(text_col), " ")).alias("h"),
-    ).where(F.size(tokens_expr(text_col)) < shingle_k)
-    shingled = shingled.unionByName(short)
-    aggs = [
-        F.min(F.col("h").bitwiseXOR(F.lit(c).cast("bigint"))).alias(f"h{i}")
-        for i, c in enumerate(consts)
-    ]
-    return (
-        shingled.groupBy("id")
-        .agg(*aggs)
-        .select(
-            "id",
-            F.array(*[F.col(f"h{i}") for i in range(num_hashes)]).alias(
-                "minhash"
-            ),
-        )
+    `id_col` must be a key of `docs`: each row gets its own signature.
+    Every caller passes one — `documents.doc_id`, its subsets in the
+    funnels and the streaming gate, the crawl's shard*RPS+record ids and
+    the benchmark's corpus batches."""
+    src = ensure_parallelism(docs.select(id_col, text_col)).select(
+        F.col(id_col).alias("id"), tokens_expr(text_col).alias("toks")
+    )
+    longs = T.ArrayType(T.LongType())
+    fields = [src.schema["id"], T.StructField("minhash", longs)]
+    if bands:
+        fields.append(T.StructField("band_hashes", longs))
+    return src.mapInArrow(
+        _minhash_kernel(num_hashes, shingle_k, bands), T.StructType(fields)
     )
 
 
@@ -221,7 +268,7 @@ def minhash_signature_expr(
     projection. Same family math (min over shingle md5s XOR C_i), so the
     values are identical to the batch operator's; the higher-order-array
     form runs on Spark's interpreted path and is only for small per-batch
-    streams — batch corpora should keep the codegen'd aggregate form."""
+    streams — batch corpora should use the minhash_signatures kernel."""
     consts = _xor_family_constants(num_hashes)
     hs_expr = F.transform(
         shingles_expr(tokens_expr(text_col), shingle_k), md5_60
@@ -296,16 +343,17 @@ def minhash_lsh_pairs(
     agreement → threshold filter. The self-join is on the band-hash key,
     so only docs sharing a band collide (candidate volume, not n²).
     """
-    # materialize signatures before the self-join: the map-only signature
-    # plan has no shuffle boundary, so without this both join sides (x 16
-    # bands) would re-evaluate the whole tokenize→shingle→hash expression
-    # tree. Signatures are tiny (num_hashes longs per doc) — cache is the
-    # standard LSH pipeline barrier at any scale.
+    # cache the kernel output before the self-join: both join sides read
+    # the map-only signature plan, and the cache runs the kernel once
+    # whatever join AQE picks (a broadcast side cannot reuse the other
+    # side's shuffle). Signatures are tiny (num_hashes + bands longs per
+    # doc) at any scale.
     sigs = minhash_signatures(
-        docs, id_col, text_col, num_hashes, shingle_k
+        docs, id_col, text_col, num_hashes, shingle_k, bands
     ).cache()
-
-    banded = band_hashes(sigs, num_hashes, bands)
+    banded = sigs.select(
+        "id", "minhash", F.posexplode("band_hashes").alias("band", "band_hash")
+    )
 
     left = banded.select(
         F.col("id").alias("id_a"),

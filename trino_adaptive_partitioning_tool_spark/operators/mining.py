@@ -12,8 +12,10 @@ the reference's fragile ``" AS "`` string split for MV DDL
 Spark integration is Arrow-batched ``mapInPandas`` (UDTF-shaped: one SQL
 string in, many ``(kind, name, cnt)`` rows out), so mining a query log
 scales linearly with executors — no driver-side loop over log rows. At
-100 TB of logs this is the only Python hot path in the engine; everything
-downstream is JVM-side DataFrame algebra.
+100 TB of logs this is the advisor's only Python hot path (the pipeline
+operators have their own: the MinHash kernel in operators/dedup, the
+crawl and multimodal codecs); everything downstream of it is JVM-side
+DataFrame algebra.
 
 Supported Trino grammar (tokenizer-level; each row certified by
 tests/test_mining.py — unit/golden cases plus the generative

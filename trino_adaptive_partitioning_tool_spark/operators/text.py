@@ -1,8 +1,9 @@
 """Text-analysis operators for LLM-training-data pipelines (extensions).
 
-All hot paths are JVM-side `pyspark.sql.functions` expressions — no
-Python UDFs: these run per-document over the full corpus, exactly where a
-row-at-a-time UDF would dominate cost at 100 TB.
+All hot paths here are JVM-side `pyspark.sql.functions` expressions — no
+row-at-a-time Python UDFs, which would dominate cost per document at
+100 TB. (MinHash signatures, in operators/dedup, are an Arrow-batched
+Python kernel.)
 
   token_stats        whitespace + regex token counting, char stats
   quality_scores     length / punctuation / stopword / repetition ratios
@@ -275,8 +276,8 @@ def ngram_hashes(
     document by default.
 
     The shingle stream is built with posexplode + lead() windows (the
-    codegen'd form — see minhash_signatures for why the higher-order
-    array-expression form is off the hot path), hashed once per shingle.
+    codegen'd form: Spark's higher-order array functions run on the
+    interpreted path), hashed once per shingle.
     Documents shorter than n tokens emit no rows. This is the shared
     substrate for containment / contamination checks. `distinct=False`
     skips the dedup EXCHANGE — consumers whose aggregation is already

@@ -30,6 +30,26 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+_MAX_DRIVER_MB = 16 * 1024
+
+
+def driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """spark.driver.memory: SPARK_GRAFT_DRIVER_MEM when set, else about
+    half the host's MemTotal capped at 16g — a fixed 16g heap grows past
+    physical memory on a 15 GB host and the JVM is OOM-killed. 16g where
+    the host's memory is unknown (no /proc/meminfo)."""
+    pinned = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if pinned:
+        return pinned
+    try:
+        with open(meminfo) as f:
+            kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        return "16g"
+    half_mb = kb // 2048
+    return "16g" if half_mb >= _MAX_DRIVER_MB else f"{half_mb}m"
+
+
 def get_spark(
     app_name: str = "trino-adaptive-partitioning-spark",
     shuffle_partitions: int | None = None,
@@ -53,7 +73,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # r13 (guide §3.1/§9) — shuffled-hash join enablement tried and

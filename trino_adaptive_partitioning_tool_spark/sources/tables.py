@@ -114,18 +114,18 @@ def split_layout_dir(sf_dir: str) -> str:
                     and pf.metadata.num_rows >= _SPLIT_ROW_GROUPS
                 )
                 if rewrite:
-                    tbl = _pq.read_table(src)
                     # 1024-row floor: tables smaller than 32k rows get
                     # proportionally fewer groups instead of degenerate
                     # hundred-row ones (per-group reader state is a
                     # fixed cost; guide §6 small-files reasoning at
                     # row-group granularity)
-                    _pq.write_table(
-                        tbl, dst,
-                        row_group_size=max(
-                            1024, -(-tbl.num_rows // _SPLIT_ROW_GROUPS)
-                        ),
+                    group = max(
+                        1024, -(-pf.metadata.num_rows // _SPLIT_ROW_GROUPS)
                     )
+                    # one row group in memory at a time, not the table
+                    with _pq.ParquetWriter(dst, pf.schema_arrow) as out:
+                        for batch in pf.iter_batches(batch_size=group):
+                            out.write_batch(batch, row_group_size=group)
                     # hard guarantee: a rewrite that changes the logical
                     # schema must never reach a query — fall back to the
                     # original file instead
