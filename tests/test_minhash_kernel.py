@@ -1,8 +1,7 @@
 """The MinHash signature kernel (operators/dedup.minhash_signatures, one
-mapInArrow pass) against its two independent renderings on hand-built
-edge documents: the DuckDB replay the oracles use
-(queries/dedup._minhash_sig_ctes / _minhash_banded_cte) and the JVM
-banding expression (operators/dedup.band_hashes)."""
+mapInArrow pass) against the DuckDB replay the oracles use
+(queries/dedup._minhash_sig_ctes) on hand-built edge documents, and the
+kernel's plan-build contract on derived inputs."""
 
 from __future__ import annotations
 
@@ -10,6 +9,7 @@ import hashlib
 
 import duckdb
 import pytest
+from pyspark.sql import functions as F
 
 from conftest import PARITY_SF_DIR, SMOKE_SF_DIR
 
@@ -17,7 +17,6 @@ from trino_adaptive_partitioning_tool_spark.operators import dedup as dops
 from trino_adaptive_partitioning_tool_spark.queries import dedup as qdedup
 
 N = dops.DEFAULT_NUM_HASHES
-BANDS = dops.DEFAULT_BANDS
 
 # inside the tokenizer's cross-engine envelope (tests/test_cross_engine_fuzz.py):
 # no Turkish İ, no capital final sigma, no Unicode spaces
@@ -53,8 +52,8 @@ def _docs(spark, rows):
 
 def _kernel(spark, rows):
     return {
-        r["id"]: (r["minhash"], r["band_hashes"])
-        for r in dops.minhash_signatures(_docs(spark, rows), bands=BANDS).collect()
+        r["id"]: r["minhash"]
+        for r in dops.minhash_signatures(_docs(spark, rows)).collect()
     }
 
 
@@ -68,11 +67,9 @@ def test_kernel_matches_duckdb_replay(spark, duck):
             f"SELECT doc_id, {cols} FROM sig"
         ).fetchall()
     }
-    banded = duck.execute(
-        f"WITH {qdedup._minhash_sig_ctes(source='edge_docs')}, "
-        f"{qdedup._minhash_banded_cte()} SELECT doc_id, band, band_hash FROM banded"
-    ).fetchall()
-    # where the engines differ: for null text Spark emits no row, and for
+    # where the engines differ: for null text Spark emits no row (so did
+    # the earlier aggregate plan under ANSI mode, Spark 4's default; with
+    # ANSI off its size(null) = -1 gave the replay's all-NULL row), and for
     # token-less text it hashes "" while DuckDB's array_to_string([]) is
     # NULL; the replay gives both an all-NULL signature (no testdata
     # document has either, see test_documents_doc_id_is_a_key)
@@ -81,26 +78,14 @@ def test_kernel_matches_duckdb_replay(spark, duck):
     assert sorted(got) == [d for d, t in EDGE_DOCS if t is not None]
     assert sorted(sig) == sorted(got)[2:]
     for doc_id, mh in sig.items():
-        assert got[doc_id][0] == mh, doc_id
-    for doc_id, band, band_hash in banded:
-        if doc_id in sig:
-            assert got[doc_id][1][band] == band_hash, (doc_id, band)
-
-
-def test_kernel_bands_match_jvm_banding(spark):
-    docs = _docs(spark, EDGE_DOCS)
-    got = _kernel(spark, EDGE_DOCS)
-    jvm = dops.band_hashes(dops.minhash_signatures(docs)).collect()
-    assert len(jvm) == len(got) * BANDS
-    for r in jvm:
-        assert got[r["id"]][1][r["band"]] == r["band_hash"], (r["id"], r["band"])
+        assert got[doc_id] == mh, doc_id
 
 
 def test_empty_and_whitespace_docs_hash_the_empty_string(spark):
     h = int.from_bytes(hashlib.md5(b"").digest()[:8], "big") >> 4
     expected = [h ^ c for c in dops._xor_family_constants(N)]
     got = _kernel(spark, EDGE_DOCS)
-    assert got[2][0] == got[3][0] == expected
+    assert got[2] == got[3] == expected
     assert 1 not in got  # null text: no row
 
 
@@ -113,8 +98,32 @@ def test_repeated_id_gets_one_signature_per_row(spark):
         _docs(spark, [(13, EDGE_DOCS[-1][1]), (13, REPEATED[1])])
     ).collect()
     assert sorted(r["minhash"] for r in rows) == sorted(
-        [alone[13][0], alone[14][0]]
+        [alone[13], alone[14]]
     )
+
+
+def test_derived_input_builds_without_a_spark_job(spark):
+    """Only a file scan goes through ensure_parallelism: on a cached or
+    derived input its exact partition count would run the input while
+    the plan is built (the crawl and funnel queries sign such frames
+    inside their memoized plan builds)."""
+    sc = spark.sparkContext
+    cached = (
+        _docs(spark, EDGE_DOCS)
+        .groupBy("doc_id")
+        .agg(F.first("text").alias("text"))
+        .persist()
+    )
+    group = "minhash-derived-plan-build"
+    sc.setJobGroup(group, "build only")
+    try:
+        dops.minhash_signatures(cached)
+        dops.minhash_lsh_pairs(cached)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        cached.unpersist()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
 @pytest.mark.parametrize("sf_dir", [SMOKE_SF_DIR, PARITY_SF_DIR])

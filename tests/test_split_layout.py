@@ -248,9 +248,8 @@ def test_twin_rewrite_matches_whole_table_rewrite(tmp_path):
     for fn in rewritten:
         whole = pq.read_table(f"{SF01}/{fn}")
         ref = tmp_path / fn
-        pq.write_table(
-            whole, ref, row_group_size=max(1024, -(-whole.num_rows // 32))
-        )
+        group = pq.ParquetFile(f"{twin}/{fn}").metadata.row_group(0).num_rows
+        pq.write_table(whole, ref, row_group_size=group)
         a, b = pq.ParquetFile(ref).metadata, pq.ParquetFile(f"{twin}/{fn}").metadata
         assert a.num_row_groups == b.num_row_groups, fn
         assert [a.row_group(i).num_rows for i in range(a.num_row_groups)] == [

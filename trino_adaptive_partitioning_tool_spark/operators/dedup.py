@@ -4,8 +4,8 @@ Not present in the reference (its surface stops at partition advice); these
 are the BASELINE.json extension operators, designed for 100 TB first:
 
   exact_duplicates      one hash-aggregate shuffle on the dedup key
-  minhash_signatures    shingle → k minhashes (+ LSH band hashes) in one
-                        map-only mapInArrow kernel pass
+  minhash_signatures    shingle → k minhashes in one map-only mapInArrow
+                        kernel pass
   minhash_lsh_pairs     band-bucket join → candidate pairs → exact-Jaccard
                         verify (the standard MinHash-LSH pipeline: no
                         all-pairs product ever materializes)
@@ -23,15 +23,15 @@ is oracle-checkable, not just rows-checkable. 60 bits keeps every value
 positive in signed int64 on both engines (no ANSI overflow, no
 sign-extension mismatch).
 
-MinHash is the one sketch with a Python hot path. Its JVM shape (token
-posexplode → hash shuffle and sort for a lead() window → 64 min
-aggregates → interpreted banding lambdas) moved ~400k token rows per 5k
-documents through an exchange and a sort; the signature kernel instead
-takes each document's token array and does shingling, hashing
-(`hashlib` md5, first 8 digest bytes >> 4 — the same 60-bit value),
-the XOR-min family and the band hashes in one Arrow batch pass: no
-token or shingle row ever shuffles or sorts. SimHash and exact dedup
-stay JVM-side expressions.
+MinHash signatures are the one sketch with a Python hot path. Their JVM
+shape (token posexplode → hash shuffle and sort for a lead() window →
+64 min aggregates) moved ~400k token rows per 5k documents through an
+exchange and a sort; the signature kernel instead takes each
+document's token array and does shingling, hashing (`hashlib` md5,
+first 8 digest bytes >> 4 — the same 60-bit value) and the XOR-min
+family in one Arrow batch pass: no token or shingle row ever shuffles
+or sorts. LSH banding (band_hashes), SimHash and exact dedup stay
+JVM-side expressions.
 """
 
 from __future__ import annotations
@@ -155,17 +155,15 @@ def _xor_family_constants(n: int) -> list[int]:
     return [int(x) for x in rng.integers(0, 2**60, size=n, dtype=np.int64)]
 
 
-def _minhash_kernel(num_hashes: int, shingle_k: int, bands: int | None):
+def _minhash_kernel(num_hashes: int, shingle_k: int):
     """The mapInArrow function behind minhash_signatures: (id, toks)
-    batches in, (id, minhash[, band_hashes]) batches out. It closes over
-    stdlib, numpy and pyarrow only, so a worker unpickles it without
-    importing this package."""
+    batches in, (id, minhash) batches out. It closes over stdlib, numpy
+    and pyarrow only, so a worker unpickles it without importing this
+    package."""
     import numpy as np
 
     consts = np.asarray(_xor_family_constants(num_hashes), dtype=np.int64)
     k = shingle_k
-    rows_per_band = num_hashes // bands if bands else 0
-    names = ["id", "minhash", "band_hashes"] if bands else ["id", "minhash"]
 
     def kernel(batches):
         import hashlib
@@ -179,11 +177,6 @@ def _minhash_kernel(num_hashes: int, shingle_k: int, bands: int | None):
             # digits: the value md5_60() computes on the JVM
             digests = b"".join(md5(s.encode()).digest() for s in strings)
             return (np.frombuffer(digests, ">u8")[::2] >> 4).astype(np.int64)
-
-        def lists(matrix):
-            n, width = matrix.shape
-            offsets = np.arange(0, n * width + 1, width, dtype=np.int32)
-            return pa.ListArray.from_arrays(offsets, matrix.ravel())
 
         for batch in batches:
             keep, sigs = [], []
@@ -199,16 +192,12 @@ def _minhash_kernel(num_hashes: int, shingle_k: int, bands: int | None):
                 keep.append(i)
             if not keep:
                 continue
-            sig = np.vstack(sigs)
-            cols = [batch.column(0).take(pa.array(keep)), lists(sig)]
-            if bands:
-                keys = (
-                    ",".join(map(str, row[b * rows_per_band : (b + 1) * rows_per_band]))
-                    for row in sig.tolist()
-                    for b in range(bands)
-                )
-                cols.append(lists(md5_60(keys).reshape(len(keep), bands)))
-            yield pa.RecordBatch.from_arrays(cols, names=names)
+            offsets = np.arange(0, len(keep) * num_hashes + 1, num_hashes, dtype=np.int32)
+            minhash = pa.ListArray.from_arrays(offsets, np.vstack(sigs).ravel())
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(0).take(pa.array(keep)), minhash],
+                names=["id", "minhash"],
+            )
 
     return kernel
 
@@ -219,43 +208,41 @@ def minhash_signatures(
     text_col: str = "text",
     num_hashes: int = DEFAULT_NUM_HASHES,
     shingle_k: int = DEFAULT_SHINGLE_K,
-    bands: int | None = None,
 ) -> DataFrame:
-    """(id, minhash array<bigint>[, band_hashes array<bigint>]) —
-    XOR-fold minhash family: each distinct k-token shingle string is
-    md5_60'd once (the expensive hash), then the i-th family member is
-    min over shingles of (hash XOR C_i) for fixed constants C_i, so a
-    full family costs one real hash per shingle. A document with fewer
-    than k tokens hashes its whole space-joined token list (the empty
-    string for empty or whitespace-only text); null text gives no row.
-    With `bands`, band_hashes[b] is md5_60 of the comma-joined decimal
-    signature slice of band b — the values band_hashes() computes.
+    """(id, minhash array<bigint>) — XOR-fold minhash family: each
+    distinct k-token shingle string is md5_60'd once (the expensive
+    hash), then the i-th family member is min over shingles of
+    (hash XOR C_i) for fixed constants C_i, so a full family costs one
+    real hash per shingle. A document with fewer than k tokens hashes
+    its whole space-joined token list (the empty string for empty or
+    whitespace-only text); null text gives no row.
 
-    Shape: the JVM tokenizes (tokens_expr, after ensure_parallelism),
-    then ONE map-only mapInArrow kernel per partition builds each
-    document's distinct shingles, hashes them with hashlib (md5_60 is
-    the first 8 digest bytes >> 4, bit-identical to the JVM and DuckDB
-    renderings), takes the XOR-mins in one numpy broadcast and emits
-    the signature. No token explode, no window sort, no shingle
-    shuffle: the earlier posexplode → lead() window → 64-way min
-    aggregate plan exchanged and sorted ~400k token rows per 5k-doc
-    batch; the kernel cut the median perfbench corpus_dedup op from
-    4.03 s to 2.76 s (11 seed pairs, 4-core host).
+    Shape: the JVM tokenizes (tokens_expr; a file scan goes through
+    ensure_parallelism first), then ONE map-only mapInArrow kernel per
+    partition builds each document's distinct shingles, hashes them with
+    hashlib (md5_60 is the first 8 digest bytes >> 4, bit-identical to
+    the JVM and DuckDB renderings), takes the XOR-mins in one numpy
+    broadcast and emits the signature. No token explode, no window sort,
+    no shingle shuffle: the earlier posexplode → lead() window → 64-way
+    min aggregate plan exchanged and sorted ~400k token rows per 5k-doc
+    batch. Over 11 perfbench corpus_dedup seeds on a 4-core host, the
+    kernel cut the median op from 3.91 s to 3.10 s; spreading the old
+    plan's scan with ensure_parallelism alone reached 3.64 s.
 
     `id_col` must be a key of `docs`: each row gets its own signature.
     Every caller passes one — `documents.doc_id`, its subsets in the
     funnels and the streaming gate, the crawl's shard*RPS+record ids and
     the benchmark's corpus batches."""
-    src = ensure_parallelism(docs.select(id_col, text_col)).select(
-        F.col(id_col).alias("id"), tokens_expr(text_col).alias("toks")
+    src = docs.select(id_col, text_col)
+    if src.inputFiles():
+        # only a file scan: on a derived or cached input the partition
+        # count ensure_parallelism falls back to would run that input now
+        src = ensure_parallelism(src)
+    src = src.select(F.col(id_col).alias("id"), tokens_expr(text_col).alias("toks"))
+    schema = T.StructType(
+        [src.schema["id"], T.StructField("minhash", T.ArrayType(T.LongType()))]
     )
-    longs = T.ArrayType(T.LongType())
-    fields = [src.schema["id"], T.StructField("minhash", longs)]
-    if bands:
-        fields.append(T.StructField("band_hashes", longs))
-    return src.mapInArrow(
-        _minhash_kernel(num_hashes, shingle_k, bands), T.StructType(fields)
-    )
+    return src.mapInArrow(_minhash_kernel(num_hashes, shingle_k), schema)
 
 
 def minhash_signature_expr(
@@ -346,14 +333,12 @@ def minhash_lsh_pairs(
     # cache the kernel output before the self-join: both join sides read
     # the map-only signature plan, and the cache runs the kernel once
     # whatever join AQE picks (a broadcast side cannot reuse the other
-    # side's shuffle). Signatures are tiny (num_hashes + bands longs per
-    # doc) at any scale.
+    # side's shuffle). Signatures are tiny (num_hashes longs per doc) at
+    # any scale.
     sigs = minhash_signatures(
-        docs, id_col, text_col, num_hashes, shingle_k, bands
+        docs, id_col, text_col, num_hashes, shingle_k
     ).cache()
-    banded = sigs.select(
-        "id", "minhash", F.posexplode("band_hashes").alias("band", "band_hash")
-    )
+    banded = band_hashes(sigs, num_hashes, bands)
 
     left = banded.select(
         F.col("id").alias("id_a"),
