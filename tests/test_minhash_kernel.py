@@ -1,7 +1,10 @@
-"""The MinHash signature kernel (operators/dedup.minhash_signatures, one
-mapInArrow pass) against the DuckDB replay the oracles use
-(queries/dedup._minhash_sig_ctes) on hand-built edge documents, and the
-kernel's plan-build contract on derived inputs."""
+"""The shared md5_60 shingle kernel (operators/dedup.shingle_hashes, one
+mapInArrow pass) against the DuckDB replays the oracles use, on
+hand-built edge documents, through all three consumers: MinHash
+signatures (queries/dedup._minhash_sig_ctes), winnow fingerprints
+(queries/text._winnow_oracle) and n-gram hashes
+(queries/text._ngram_hash_cte); and the kernel's plan-build contract on
+derived inputs."""
 
 from __future__ import annotations
 
@@ -14,7 +17,9 @@ from pyspark.sql import functions as F
 from conftest import PARITY_SF_DIR, SMOKE_SF_DIR
 
 from trino_adaptive_partitioning_tool_spark.operators import dedup as dops
+from trino_adaptive_partitioning_tool_spark.operators import text as tops
 from trino_adaptive_partitioning_tool_spark.queries import dedup as qdedup
+from trino_adaptive_partitioning_tool_spark.queries import text as qtext
 
 N = dops.DEFAULT_NUM_HASHES
 
@@ -36,6 +41,8 @@ EDGE_DOCS = [
     (13, "alpha beta gamma delta"),
 ]
 REPEATED = (14, "zeta eta theta iota kappa")
+# null, empty and whitespace-only text: no tokens, so no shingles
+TOKENLESS = (1, 2, 3)
 
 
 @pytest.fixture(scope="module")
@@ -67,26 +74,63 @@ def test_kernel_matches_duckdb_replay(spark, duck):
             f"SELECT doc_id, {cols} FROM sig"
         ).fetchall()
     }
-    # where the engines differ: for null text Spark emits no row (so did
-    # the earlier aggregate plan under ANSI mode, Spark 4's default; with
-    # ANSI off its size(null) = -1 gave the replay's all-NULL row), and for
-    # token-less text it hashes "" while DuckDB's array_to_string([]) is
-    # NULL; the replay gives both an all-NULL signature (no testdata
-    # document has either, see test_documents_doc_id_is_a_key)
-    for doc_id in (1, 2, 3):
-        assert sig.pop(doc_id) == [None] * N
-    assert sorted(got) == [d for d, t in EDGE_DOCS if t is not None]
-    assert sorted(sig) == sorted(got)[2:]
+    with_tokens = [d for d, _ in EDGE_DOCS if d not in TOKENLESS]
+    assert sorted(got) == sorted(sig) == with_tokens
     for doc_id, mh in sig.items():
         assert got[doc_id] == mh, doc_id
 
 
-def test_empty_and_whitespace_docs_hash_the_empty_string(spark):
-    h = int.from_bytes(hashlib.md5(b"").digest()[:8], "big") >> 4
-    expected = [h ^ c for c in dops._xor_family_constants(N)]
+def test_token_less_docs_have_no_shingles(spark):
+    """One rule for every consumer of the kernel: a document without
+    tokens gets no MinHash row, an empty winnow sample and no n-gram
+    rows; a short document with tokens still hashes its whole token
+    list."""
+    docs = _docs(spark, EDGE_DOCS)
     got = _kernel(spark, EDGE_DOCS)
-    assert got[2] == got[3] == expected
-    assert 1 not in got  # null text: no row
+    assert not set(TOKENLESS) & set(got)
+    whole = int.from_bytes(hashlib.md5(b"one").digest()[:8], "big") >> 4
+    assert got[4] == [whole ^ c for c in dops._xor_family_constants(N)]
+    fp = {
+        r["doc_id"]: (r["winnow_fp"], r["winnow_size"])
+        for r in tops.fingerprints(docs, keep_every=1).collect()
+    }
+    assert sorted(fp) == [d for d, _ in EDGE_DOCS]
+    for doc_id in TOKENLESS:
+        assert fp[doc_id] == ([], 0)
+    assert fp[4] == ([whole], 1)
+    ngram_ids = {r["id"] for r in tops.ngram_hashes(docs, 1).collect()}
+    assert ngram_ids == set(got)
+
+
+@pytest.mark.parametrize("k,keep_every", [(4, 8), (3, 1)])
+def test_fingerprints_match_winnow_replay(spark, duck, k, keep_every):
+    got = {
+        r["doc_id"]: (",".join(map(str, r["winnow_fp"])), r["winnow_size"])
+        for r in tops.fingerprints(
+            _docs(spark, EDGE_DOCS), shingle_k=k, keep_every=keep_every
+        ).collect()
+    }
+    want = {
+        r[0]: (r[1], r[2])
+        for r in duck.execute(
+            qtext._winnow_oracle(k, keep_every, source="edge_docs")
+        ).fetchall()
+    }
+    assert got == want
+
+
+@pytest.mark.parametrize("n", [3, 5])
+def test_ngram_hashes_match_replay(spark, duck, n):
+    rows = [
+        (r["id"], r["h"])
+        for r in tops.ngram_hashes(_docs(spark, EDGE_DOCS), n).collect()
+    ]
+    want = duck.execute(
+        f"WITH {qtext._ngram_hash_cte(n, source='edge_docs')} "
+        "SELECT doc_id, h FROM e"
+    ).fetchall()
+    assert len(rows) == len(set(rows))  # distinct per document
+    assert sorted(rows) == sorted(want)
 
 
 def test_repeated_id_gets_one_signature_per_row(spark):
@@ -105,8 +149,9 @@ def test_repeated_id_gets_one_signature_per_row(spark):
 def test_derived_input_builds_without_a_spark_job(spark):
     """Only a file scan goes through ensure_parallelism: on a cached or
     derived input its exact partition count would run the input while
-    the plan is built (the crawl and funnel queries sign such frames
-    inside their memoized plan builds)."""
+    the plan is built (the crawl and funnel queries sign and shingle
+    such frames inside their memoized plan builds). Every consumer of
+    the shingle kernel shares that guard."""
     sc = spark.sparkContext
     cached = (
         _docs(spark, EDGE_DOCS)
@@ -119,6 +164,9 @@ def test_derived_input_builds_without_a_spark_job(spark):
     try:
         dops.minhash_signatures(cached)
         dops.minhash_lsh_pairs(cached)
+        tops.fingerprints(cached)
+        tops.ngram_hashes(cached, 3)
+        tops.winnow_containment(cached)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
@@ -130,7 +178,8 @@ def test_derived_input_builds_without_a_spark_job(spark):
 def test_documents_doc_id_is_a_key(sf_dir):
     """The registered dedup queries sign `documents` (or subsets of it)
     keyed on doc_id, which the kernel's per-row contract relies on; no
-    text is null or token-less, where the kernel and the replay differ."""
+    text is null or token-less, so the no-tokens rule changes no
+    registered result."""
     n, distinct, texts = duckdb.sql(
         "SELECT count(*), count(DISTINCT doc_id), "
         f"count(*) FILTER (WHERE len({qdedup._TOKS}) > 0) "

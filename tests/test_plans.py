@@ -110,6 +110,27 @@ def test_minhash_lsh_no_cartesian_and_partial_agg(spark):
     assert sig_plan.count("MapInArrow") == 1, sig_plan
 
 
+def test_shingle_consumers_run_one_map_only_kernel(spark):
+    """ngram_hashes and fingerprints hash shingles in the shared
+    mapInArrow kernel: exactly one MapInArrow, no Window sort, and no
+    Generate over tokens (ngram_hashes' one Generate explodes the
+    kernel's hash array, above the kernel)."""
+    import re
+
+    from trino_adaptive_partitioning_tool_spark.operators import text as tops
+
+    docs = tables.load_table(spark, SMOKE_SF_DIR, "documents")
+    for df in (tops.ngram_hashes(docs, 5), tops.fingerprints(docs)):
+        plan = pi.physical_plan(df)
+        assert plan.count("MapInArrow") == 1, plan
+        assert not re.search(r"\bWindow\b", plan), plan
+        assert "hashpartitioning" not in plan, plan
+        generates = re.findall(r"Generate .*", plan)
+        assert all(g.startswith("Generate explode(hashes") for g in generates), plan
+        if generates:
+            assert plan.index("Generate") < plan.index("MapInArrow"), plan
+
+
 def test_simhash_pairs_no_cartesian(spark):
     from trino_adaptive_partitioning_tool_spark.operators import dedup
 

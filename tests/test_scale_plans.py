@@ -315,7 +315,8 @@ _SHUFFLE_CEILINGS = {
     "winnow_containment_pairs": 5,  # +1 ensure_parallelism round-robin
     "pii_redaction_stats": 1,
     "document_chunking_stats": 2,
-    # r6: shingle stream shuffled once by id (window), once by h
+    # the shingle kernel's input spread once round-robin
+    # (ensure_parallelism); its (id, h) stream shuffled once by h
     # (doc-frequency window), once by id (final rollup)
     "duplicate_span_stats": 3,
     # r6: one shuffle by source (cap window; the groupBy reuses its

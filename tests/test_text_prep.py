@@ -352,10 +352,12 @@ def test_model_quality_loader_reproduces_hash_standin(spark):
         assert loaded[d]["is_quality"] == standin[d]["is_quality"]
 
 
-def test_minhash_signature_expr_matches_batch_operator(spark):
-    """The stateless per-row signature (streaming path) must equal the
-    batch window/groupBy operator's signature value-for-value."""
-    from pyspark.sql import functions as F
+def test_streaming_minhash_signatures_match_batch_kernel(spark, tmp_path):
+    """The streaming dedup gate signs each micro-batch with
+    minhash_signatures itself: on a file-source stream drained into a
+    memory sink, its signatures equal the batch kernel's value for
+    value (a token-less document gets no row on either path)."""
+    import uuid
 
     from trino_adaptive_partitioning_tool_spark.operators import dedup as dops
 
@@ -363,20 +365,31 @@ def test_minhash_signature_expr_matches_batch_operator(spark):
         (1, "alpha beta gamma delta epsilon zeta eta theta"),
         (2, "short doc"),
         (3, "alpha beta gamma delta epsilon zeta eta theta iota"),
+        (4, "   "),
     ]
     docs = _docs(spark, rows)
     batch = {
         r["id"]: r["minhash"]
         for r in dops.minhash_signatures(docs).collect()
     }
-    streaming_form = {
-        r["id"]: r["minhash"]
-        for r in docs.select(
-            F.col("doc_id").alias("id"),
-            dops.minhash_signature_expr("text").alias("minhash"),
-        ).collect()
-    }
-    assert batch == streaming_form
+    docs.coalesce(2).write.json(str(tmp_path / "docs"))
+    stream = spark.readStream.schema("doc_id long, text string").json(
+        str(tmp_path / "docs")
+    )
+    name = f"minhash_stream_{uuid.uuid4().hex[:8]}"
+    q = (
+        dops.minhash_signatures(stream)
+        .writeStream.format("memory")
+        .queryName(name)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    streamed = {r["id"]: r["minhash"] for r in spark.table(name).collect()}
+    spark.catalog.dropTempView(name)
+    assert sorted(batch) == [1, 2, 3]
+    assert streamed == batch
 
 
 def test_annotator_column_api_matches_frame_api(spark):

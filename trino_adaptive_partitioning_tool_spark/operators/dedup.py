@@ -23,15 +23,16 @@ is oracle-checkable, not just rows-checkable. 60 bits keeps every value
 positive in signed int64 on both engines (no ANSI overflow, no
 sign-extension mismatch).
 
-MinHash signatures are the one sketch with a Python hot path. Their JVM
-shape (token posexplode → hash shuffle and sort for a lead() window →
-64 min aggregates) moved ~400k token rows per 5k documents through an
-exchange and a sort; the signature kernel instead takes each
-document's token array and does shingling, hashing (`hashlib` md5,
-first 8 digest bytes >> 4 — the same 60-bit value) and the XOR-min
-family in one Arrow batch pass: no token or shingle row ever shuffles
-or sorts. LSH banding (band_hashes), SimHash and exact dedup stay
-JVM-side expressions.
+Shingle hashing has one implementation, the shingle_hashes kernel: one
+map-only mapInArrow pass takes each document's token array and does
+shingling and hashing (`hashlib` md5, first 8 digest bytes >> 4 — the
+same 60-bit value), then emits either the XOR-min MinHash signature or
+the per-document hash array. MinHash signatures, the streaming dedup
+gate, text.fingerprints' winnow sample and text.ngram_hashes all run
+it; no token or shingle row ever shuffles or sorts. A document without
+tokens (null, empty or whitespace-only text) has no shingles, for every
+consumer and in every DuckDB replay. LSH banding (band_hashes), SimHash
+and exact dedup stay JVM-side expressions.
 """
 
 from __future__ import annotations
@@ -103,35 +104,6 @@ def tokens_expr(text_col: str = "text"):
     )
 
 
-def shingles_expr(tokens, k: int = DEFAULT_SHINGLE_K):
-    """k-token shingles of a token array (distinct), JVM-side only:
-    transform over a sliding index sequence + concat_ws.
-
-    The input expression is BOUND ONCE via a single-element transform
-    before use: the shingle logic references the token array four times
-    (size guard, index bound, per-position slice, short-doc fallback),
-    and the per-position slice sits inside a lambda — inlining an
-    unevaluated `tokens` expression there re-tokenizes the whole
-    document for every shingle position, turning an O(tokens) projection
-    into O(tokens x positions). Catalyst collapses projections, so a
-    plain intermediate column does not prevent that; a lambda variable
-    is evaluated exactly once by construction."""
-
-    def _sh(toks):
-        n = F.size(toks)
-        idx = F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1)))
-        return F.array_distinct(
-            F.when(
-                n >= k,
-                F.transform(
-                    idx, lambda i: F.concat_ws(" ", F.slice(toks, i, k))
-                ),
-            ).otherwise(F.array(F.concat_ws(" ", toks)))
-        )
-
-    return F.transform(F.array(tokens), _sh)[0]
-
-
 def exact_duplicates(df: DataFrame, key_cols: list[str], id_col: str) -> DataFrame:
     """Groups of rows identical on key_cols; one shuffle on the key hash."""
     return (
@@ -155,15 +127,25 @@ def _xor_family_constants(n: int) -> list[int]:
     return [int(x) for x in rng.integers(0, 2**60, size=n, dtype=np.int64)]
 
 
-def _minhash_kernel(num_hashes: int, shingle_k: int):
-    """The mapInArrow function behind minhash_signatures: (id, toks)
-    batches in, (id, minhash) batches out. It closes over stdlib, numpy
-    and pyarrow only, so a worker unpickles it without importing this
-    package."""
+def _shingle_kernel(shingle_k: int, num_hashes: int | None):
+    """The mapInArrow function behind shingle_hashes. The token array is
+    each batch's last column; every other column passes through. Per
+    document: the distinct k-token shingles (under k tokens, the whole
+    space-joined token list; no tokens, no shingles), md5_60 each. With
+    num_hashes, the XOR-min signature, one numpy broadcast per document,
+    and no row for a document without shingles; otherwise the hash
+    array, in no particular order, empty without shingles. It closes
+    over stdlib, numpy and pyarrow only, so a worker unpickles it without
+    importing this package."""
     import numpy as np
 
-    consts = np.asarray(_xor_family_constants(num_hashes), dtype=np.int64)
     k = shingle_k
+    consts = (
+        None
+        if num_hashes is None
+        else np.asarray(_xor_family_constants(num_hashes), dtype=np.int64)
+    )
+    out = "hashes" if consts is None else "minhash"
 
     def kernel(batches):
         import hashlib
@@ -178,28 +160,66 @@ def _minhash_kernel(num_hashes: int, shingle_k: int):
             digests = b"".join(md5(s.encode()).digest() for s in strings)
             return (np.frombuffer(digests, ">u8")[::2] >> 4).astype(np.int64)
 
+        def shingles(toks):
+            n = len(toks) if toks else 0
+            if n >= k:
+                return {" ".join(toks[j : j + k]) for j in range(n - k + 1)}
+            return (" ".join(toks),) if n else ()
+
         for batch in batches:
-            keep, sigs = [], []
-            for i, toks in enumerate(batch.column(1).to_pylist()):
-                if toks is None:
-                    continue
-                n = len(toks)
-                if n >= k:
-                    shingles = {" ".join(toks[j : j + k]) for j in range(n - k + 1)}
-                else:
-                    shingles = (" ".join(toks),)
-                sigs.append(np.bitwise_xor.outer(md5_60(shingles), consts).min(axis=0))
-                keep.append(i)
-            if not keep:
+            last = batch.num_columns - 1
+            rows, arrays = [], []
+            for i, toks in enumerate(batch.column(last).to_pylist()):
+                hs = md5_60(shingles(toks))
+                if consts is not None:
+                    if not len(hs):
+                        continue
+                    hs = np.bitwise_xor.outer(hs, consts).min(axis=0)
+                rows.append(i)
+                arrays.append(hs)
+            if not rows:
                 continue
-            offsets = np.arange(0, len(keep) * num_hashes + 1, num_hashes, dtype=np.int32)
-            minhash = pa.ListArray.from_arrays(offsets, np.vstack(sigs).ravel())
+            rest = batch.select(range(last))
+            if len(rows) < batch.num_rows:
+                rest = rest.take(pa.array(rows, pa.int64()))
+            offsets = np.cumsum([0, *map(len, arrays)], dtype=np.int32)
+            hashes = pa.ListArray.from_arrays(offsets, np.concatenate(arrays))
             yield pa.RecordBatch.from_arrays(
-                [batch.column(0).take(pa.array(keep)), minhash],
-                names=["id", "minhash"],
+                [*rest.columns, hashes], names=[*rest.schema.names, out]
             )
 
     return kernel
+
+
+def token_arrays(
+    docs: DataFrame, cols: list[Column | str], text_col: str = "text"
+) -> DataFrame:
+    """`cols` of `docs`, then `toks`, the tokens_expr array of `text_col`:
+    the input shingle_hashes takes. A batch file scan goes through
+    ensure_parallelism first; a stream, or a derived or cached input,
+    does not (on those the partition count ensure_parallelism falls back
+    to would run the input while the plan is built)."""
+    src = docs.select(*cols, text_col)
+    if not src.isStreaming and src.inputFiles():
+        src = ensure_parallelism(src)
+    return src.select(*src.columns[:-1], tokens_expr(text_col).alias("toks"))
+
+
+def shingle_hashes(
+    src: DataFrame, shingle_k: int, num_hashes: int | None = None
+) -> DataFrame:
+    """The one md5_60 shingle-hash pass, a map-only mapInArrow kernel over
+    a token_arrays frame: its columns but `toks` pass through, plus
+    `minhash` (the num_hashes-long XOR-min signature; documents without
+    tokens give no row) or, without num_hashes, `hashes` (each document's
+    distinct shingle hashes; empty without tokens). A document with
+    fewer than shingle_k tokens has one shingle, its whole space-joined
+    token list. Legal on a stream too: the kernel keeps no state."""
+    out = "hashes" if num_hashes is None else "minhash"
+    schema = T.StructType(
+        src.schema.fields[:-1] + [T.StructField(out, T.ArrayType(T.LongType()))]
+    )
+    return src.mapInArrow(_shingle_kernel(shingle_k, num_hashes), schema)
 
 
 def minhash_signatures(
@@ -214,68 +234,28 @@ def minhash_signatures(
     hash), then the i-th family member is min over shingles of
     (hash XOR C_i) for fixed constants C_i, so a full family costs one
     real hash per shingle. A document with fewer than k tokens hashes
-    its whole space-joined token list (the empty string for empty or
-    whitespace-only text); null text gives no row.
+    its whole space-joined token list; a document without tokens (null,
+    empty or whitespace-only text) has no shingles and gives no row.
 
-    Shape: the JVM tokenizes (tokens_expr; a file scan goes through
-    ensure_parallelism first), then ONE map-only mapInArrow kernel per
-    partition builds each document's distinct shingles, hashes them with
-    hashlib (md5_60 is the first 8 digest bytes >> 4, bit-identical to
-    the JVM and DuckDB renderings), takes the XOR-mins in one numpy
-    broadcast and emits the signature. No token explode, no window sort,
-    no shingle shuffle: the earlier posexplode → lead() window → 64-way
-    min aggregate plan exchanged and sorted ~400k token rows per 5k-doc
-    batch. Over 11 perfbench corpus_dedup seeds on a 4-core host, the
-    kernel cut the median op from 3.91 s to 3.10 s; spreading the old
-    plan's scan with ensure_parallelism alone reached 3.64 s.
+    Shape: token_arrays, then shingle_hashes: ONE map-only mapInArrow
+    kernel per partition builds each document's distinct shingles,
+    hashes them with hashlib (md5_60 is the first 8 digest bytes >> 4,
+    bit-identical to the JVM and DuckDB renderings), takes the XOR-mins
+    in one numpy broadcast and emits the signature. No token explode, no
+    window sort, no shingle shuffle: the earlier posexplode → lead()
+    window → 64-way min aggregate plan exchanged and sorted ~400k token
+    rows per 5k-doc batch. Over 11 perfbench corpus_dedup seeds on a
+    4-core host, the kernel cut the median op from 3.91 s to 3.10 s;
+    spreading the old plan's scan with ensure_parallelism alone reached
+    3.64 s. The kernel is stateless, so a streaming `docs` signs each
+    micro-batch (the streaming dedup gate).
 
     `id_col` must be a key of `docs`: each row gets its own signature.
     Every caller passes one — `documents.doc_id`, its subsets in the
     funnels and the streaming gate, the crawl's shard*RPS+record ids and
     the benchmark's corpus batches."""
-    src = docs.select(id_col, text_col)
-    if src.inputFiles():
-        # only a file scan: on a derived or cached input the partition
-        # count ensure_parallelism falls back to would run that input now
-        src = ensure_parallelism(src)
-    src = src.select(F.col(id_col).alias("id"), tokens_expr(text_col).alias("toks"))
-    schema = T.StructType(
-        [src.schema["id"], T.StructField("minhash", T.ArrayType(T.LongType()))]
-    )
-    return src.mapInArrow(_minhash_kernel(num_hashes, shingle_k), schema)
-
-
-def minhash_signature_expr(
-    text_col: str = "text",
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    shingle_k: int = DEFAULT_SHINGLE_K,
-) -> Column:
-    """Per-row array<bigint> minhash signature — the STATELESS twin of
-    minhash_signatures (no window, no groupBy), legal inside a streaming
-    projection. Same family math (min over shingle md5s XOR C_i), so the
-    values are identical to the batch operator's; the higher-order-array
-    form runs on Spark's interpreted path and is only for small per-batch
-    streams — batch corpora should use the minhash_signatures kernel."""
-    consts = _xor_family_constants(num_hashes)
-    hs_expr = F.transform(
-        shingles_expr(tokens_expr(text_col), shingle_k), md5_60
-    )
-
-    def _sig(hs):
-        return F.array(
-            *[
-                F.array_min(
-                    F.transform(
-                        hs, lambda h: h.bitwiseXOR(F.lit(c).cast("bigint"))
-                    )
-                )
-                for c in consts
-            ]
-        )
-
-    # bind the shingle-hash array once (same lambda-binding trick as
-    # shingles_expr — inlining hs_expr would re-hash per constant)
-    return F.transform(F.array(hs_expr), _sig)[0]
+    src = token_arrays(docs, [F.col(id_col).alias("id")], text_col)
+    return shingle_hashes(src, shingle_k, num_hashes)
 
 
 def band_hashes(

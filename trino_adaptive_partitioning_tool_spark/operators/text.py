@@ -1,9 +1,11 @@
 """Text-analysis operators for LLM-training-data pipelines (extensions).
 
-All hot paths here are JVM-side `pyspark.sql.functions` expressions — no
+Hot paths here are JVM-side `pyspark.sql.functions` expressions — no
 row-at-a-time Python UDFs, which would dominate cost per document at
-100 TB. (MinHash signatures, in operators/dedup, are an Arrow-batched
-Python kernel.)
+100 TB — except shingle hashing: fingerprints and ngram_hashes run the
+one Arrow-batched md5_60 shingle kernel (operators/dedup.shingle_hashes)
+that MinHash signatures run too. A document without tokens has no
+shingles: an empty winnow sample, no n-gram rows.
 
   token_stats        whitespace + regex token counting, char stats
   quality_scores     length / punctuation / stopword / repetition ratios
@@ -19,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import md5_60, shingles_expr, tokens_expr
+from .dedup import md5_60, shingle_hashes, token_arrays, tokens_expr
 
 # small function-word marker lists per language (public common words)
 LANGUAGE_MARKERS: dict[str, tuple[str, ...]] = {
@@ -170,6 +172,15 @@ def predicted_lang_col(text_col: str = "text") -> Column:
     return language_best_col(text_col)["lang"]
 
 
+def content_md5_col(text_col: str = "text") -> Column:
+    """md5 of the whitespace-normalized, lowercased text: fingerprints'
+    exact-dup key as a pure column expression. A query that needs only
+    this key uses it directly: the winnow kernel is opaque to column
+    pruning, so selecting it off fingerprints() would still run it."""
+    norm = F.lower(F.trim(F.regexp_replace(F.col(text_col), r"\s+", " ")))
+    return F.md5(norm)
+
+
 def language_id(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
@@ -197,21 +208,21 @@ def fingerprints(
                     == 0 — a winnowing-style deterministic sample) for
                     containment / overlap estimation
 
-    Hashes are md5_60 (60-bit md5-prefix ints), so the fingerprints are
-    bit-for-bit reproducible in DuckDB and oracle-checked.
+    Hashes are md5_60 (60-bit md5-prefix ints) of each document's
+    distinct shingle_k-token shingles (the whole token list under
+    shingle_k tokens; none, so an empty sample, without tokens), taken
+    by the shared shingle_hashes kernel; the fingerprints are bit-for-bit
+    reproducible in DuckDB and oracle-checked.
     """
-    from .dedup import ensure_parallelism
-
-    docs = ensure_parallelism(docs)
-    norm = F.lower(F.trim(F.regexp_replace(F.col(text_col), r"\s+", " ")))
-    sh = shingles_expr(tokens_expr(text_col), shingle_k)
-    hashes = F.transform(sh, lambda s: md5_60(s))
-    winnow = F.sort_array(
-        F.filter(hashes, lambda h: F.pmod(h, F.lit(keep_every)) == 0)
+    src = token_arrays(
+        docs, [id_col, content_md5_col(text_col).alias("content_md5")], text_col
     )
-    return docs.select(
-        F.col(id_col),
-        F.md5(norm).alias("content_md5"),
+    winnow = F.sort_array(
+        F.filter("hashes", lambda h: F.pmod(h, F.lit(keep_every)) == 0)
+    )
+    return shingle_hashes(src, shingle_k).select(
+        id_col,
+        "content_md5",
         winnow.alias("winnow_fp"),
         F.size(winnow).cast("bigint").alias("winnow_size"),
     )
@@ -270,40 +281,21 @@ def ngram_hashes(
     n: int,
     id_col: str = "doc_id",
     text_col: str = "text",
-    distinct: bool = True,
 ) -> DataFrame:
-    """(id, h): md5_60 hashes of every n-token shingle, deduped per
-    document by default.
+    """(id, h): md5_60 hashes of each document's distinct n-token
+    shingles, one row per (document, shingle hash). Documents shorter
+    than n tokens emit no rows. This is the shared substrate for
+    containment / contamination checks.
 
-    The shingle stream is built with posexplode + lead() windows (the
-    codegen'd form: Spark's higher-order array functions run on the
-    interpreted path), hashed once per shingle.
-    Documents shorter than n tokens emit no rows. This is the shared
-    substrate for containment / contamination checks. `distinct=False`
-    skips the dedup EXCHANGE — consumers whose aggregation is already
-    distinct-aware (countDistinct downstream) should pass it: the window
-    has partitioned the stream by id, so a following groupBy(id) then
-    needs no further shuffle at all."""
-    from pyspark.sql import Window
-
-    toks = docs.select(
-        F.col(id_col).alias("id"),
-        F.posexplode(
-            F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-        ).alias("pos", "token"),
-    ).where(F.col("token") != "")
-    w = Window.partitionBy("id").orderBy("pos")
-    parts = [F.col("token")] + [
-        F.lead("token", i).over(w) for i in range(1, n)
-    ]
-    out = toks.select(
-        "id",
-        F.when(
-            F.lead("token", n - 1).over(w).isNotNull(),
-            md5_60(F.concat_ws(" ", *parts)),
-        ).alias("h"),
-    ).where(F.col("h").isNotNull())
-    return out.distinct() if distinct else out
+    Scale shape: map-only. Documents with at least n tokens go through
+    the shared shingle_hashes kernel (so its whole-document rule for
+    short documents never fires), and its per-document hash array is
+    exploded: no token explode, no window sort, no dedup exchange — the
+    kernel's per-document set already makes each (id, h) distinct."""
+    src = token_arrays(docs, [F.col(id_col).alias("id")], text_col)
+    return shingle_hashes(src.where(F.size("toks") >= n), n).select(
+        "id", F.explode("hashes").alias("h")
+    )
 
 
 def decontamination_overlap(
@@ -326,10 +318,7 @@ def decontamination_overlap(
     second pass over the corpus, no |train| x |benchmark| product. The
     countDistinct on h corrects for h matching multiple benchmark
     docs."""
-    # distinct=False on the train side: the countDistinct aggregates
-    # below already implement set semantics, so the dedup exchange would
-    # be pure overhead on the corpus-sized stream
-    t = ngram_hashes(train, n, id_col, text_col, distinct=False)
+    t = ngram_hashes(train, n, id_col, text_col)
     b = ngram_hashes(benchmark, n, id_col, text_col).withColumnRenamed(
         "id", "bench_id"
     )
@@ -504,7 +493,7 @@ def _span_skew_probe(
     # which would silently drop a MIN_VALUE-hashing row from the sample
     sample = docs.where(F.pmod(F.hash(F.col(id_col)), F.lit(probe_mod)) == 0)
     row = (
-        ngram_hashes(sample, n, id_col, text_col, distinct=True)
+        ngram_hashes(sample, n, id_col, text_col)
         .groupBy("h")
         .agg(F.count(F.lit(1)).alias("df"))
         .agg(F.max("df").alias("m"))
@@ -539,14 +528,15 @@ def duplicate_span_stats(
     Returns (id, n_spans, n_shared_spans, shared_span_ratio); documents
     shorter than n tokens emit no row.
 
-    Scale shape: one shuffle of the (id, h) stream by h, one
-    groupBy(id); span hashes are corpus-scale but never collected or
-    broadcast. Window path annotates each (id, h) row with its span's
-    doc-frequency via an unordered COUNT window over h — no join, ~3x
-    faster than aggregate-then-join at sf0.1. WindowExec buffers one
-    h-group at a time (spillable), so a boilerplate span shared by
-    millions of documents makes one long task; the aggregate + equi-join
-    form (``skew_safe=True``) trades the window for a join AQE can
+    Scale shape: the (id, h) stream comes map-only out of ngram_hashes'
+    shingle kernel (no token shuffle or sort); then one shuffle of it by
+    h and one groupBy(id). Span hashes are corpus-scale but never
+    collected or broadcast. Window path annotates each (id, h) row with
+    its span's doc-frequency via an unordered COUNT window over h — no
+    join, ~3x faster than aggregate-then-join at sf0.1. WindowExec
+    buffers one h-group at a time (spillable), so a boilerplate span
+    shared by millions of documents makes one long task; the aggregate +
+    equi-join form (``skew_safe=True``) trades the window for a join AQE can
     skew-split. ``skew_safe=None`` (default) AUTO-DISPATCHES via
     _span_skew_probe: a deterministic hash-sample of documents
     extrapolates the max span doc-frequency, choosing the safe form
@@ -561,7 +551,7 @@ def duplicate_span_stats(
         skew_safe = _span_skew_probe(
             docs, n, id_col, text_col, probe_mod, df_ceiling
         )
-    h = ngram_hashes(docs, n, id_col, text_col, distinct=True)
+    h = ngram_hashes(docs, n, id_col, text_col)
     if skew_safe:
         dfreq = h.groupBy("h").agg(F.count(F.lit(1)).alias("ndocs"))
         ann = h.join(dfreq, "h")
@@ -603,8 +593,7 @@ def repetition_stats(
     dup_bigram_ratio_col's shape) removes the corpus-wide window
     shuffle but runs on Spark's INTERPRETED higher-order-function path
     and measured 2.4x slower end-to-end at sf0.1 (0.44s -> 1.06s noop);
-    the codegen'd window + partial aggregates win despite the exchange,
-    the same trade the minhash signature operator documents."""
+    the codegen'd window + partial aggregates win despite the exchange."""
     from pyspark.sql import Window
 
     toks = docs.select(

@@ -27,6 +27,8 @@ def _minhash_sig_ctes(
 ) -> str:
     """CTEs tok→sh→e→sig replaying minhash_signatures in DuckDB:
     k-token shingle strings, md5_60 each, 64 MIN(xor(h, C_i)) aggregates.
+    A document without tokens has no shingles and no signature row, as
+    in the kernel.
     `source` lets pipeline oracles (corpus_filter_funnel) run the sketch
     over a filtered CTE instead of the base table; `prefix` renames the
     CTEs so a MATERIALIZED sketch can coexist with nested sub-oracles
@@ -47,7 +49,7 @@ def _minhash_sig_ctes(
         CASE WHEN len(toks) >= {k}
           THEN list_transform(range(1, len(toks) - {k - 2}), i -> {shingle})
           ELSE [{whole}] END AS hs
-      FROM {p}tok
+      FROM {p}tok WHERE len(toks) > 0
     ),
     {p}e AS (SELECT doc_id, unnest(hs) AS h FROM {p}sh),
     {p}sig AS (SELECT doc_id, {mins} FROM {p}e GROUP BY doc_id)"""

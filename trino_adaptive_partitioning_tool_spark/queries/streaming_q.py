@@ -786,12 +786,12 @@ def _dedup_gate_oracle() -> str:
 @register("streaming_dedup_gate", oracle=_dedup_gate_oracle())
 def streaming_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Online near-duplicate gate: newly ingested documents stream in,
-    every micro-batch computes a STATELESS per-row minhash signature
-    (operators/dedup.minhash_signature_expr — same family math as the
-    batch operator, legal in a streaming projection) plus LSH band
-    hashes, and joins the static pre-banded corpus on (band, band_hash)
-    — the admission check a continuously-fed training corpus runs
-    before accepting a document.
+    every micro-batch computes its minhash signatures with the batch
+    operator (operators/dedup.minhash_signatures — one stateless
+    mapInArrow kernel, legal on a stream) plus LSH band hashes, and
+    joins the static pre-banded corpus on (band, band_hash) — the
+    admission check a continuously-fed training corpus runs before
+    accepting a document.
 
     Full oracle: the stream-static candidate join is stateless →
     slicing-invariant; scoring (signature-agreement Jaccard, exact
@@ -822,12 +822,9 @@ def streaming_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = (
         spark.readStream.schema("doc_id long, text string").json(f"{tmp}/docs")
     )
-    stream_banded = dops.band_hashes(
-        stream.select(
-            F.col("doc_id").alias("id"),
-            dops.minhash_signature_expr("text").alias("minhash"),
-        )
-    ).select(F.col("id").alias("new_id"), "band", "band_hash")
+    stream_banded = dops.band_hashes(dops.minhash_signatures(stream)).select(
+        F.col("id").alias("new_id"), "band", "band_hash"
+    )
     cand_stream = stream_banded.join(
         corpus_banded, ["band", "band_hash"]
     ).select("new_id", "corpus_id")

@@ -131,7 +131,9 @@ def text_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_fingerprint_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = tables.load_table(spark, sf_dir, "documents")
-    return ops.fingerprints(docs).select("doc_id", "content_md5")
+    return docs.select(
+        "doc_id", ops.content_md5_col("text").alias("content_md5")
+    )
 
 
 @register(
@@ -235,12 +237,14 @@ def dataset_quality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _winnow_oracle(k: int = 4, keep_every: int = 8) -> str:
+def _winnow_oracle(
+    k: int = 4, keep_every: int = 8, source: str = "documents"
+) -> str:
     from ..operators.dedup import md5_60_sql
 
     shingle = f"array_to_string(list_slice(toks, i, i + {k - 1}), ' ')"
     return f"""
-    WITH tok AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
+    WITH tok AS (SELECT doc_id, {_TOKS} AS toks FROM {source}),
     sh AS (
       SELECT doc_id,
         CASE WHEN len(toks) >= {k}
